@@ -123,6 +123,15 @@ object GraftConf {
     localScratchDir.fold(b)(d => b.config("spark.local.dir", d))
   }
 
+  /** Chosen once per JVM and logged (an ENOSPC on a RAM-backed tmpfs
+    * is only diagnosable if the log names the directory).
+    */
+  private lazy val localScratchDir: Option[String] = {
+    val d = chooseScratchDir
+    System.err.println(s"[graft] spark.local.dir = ${d.getOrElse("Spark default")}")
+    d
+  }
+
   /** Shuffle/spill scratch DECOUPLED from the table disk (r20; the
     * standing single-disk instrument band, documented since r16):
     * `spark.local.dir` defaults to /tmp, which on this class of box is
@@ -134,7 +143,11 @@ object GraftConf {
     *      for sf100 sweeps whose spill exceeds RAM-backed scratch);
     *   2. a RAM-backed tmpfs (/dev/shm) when it is writable with
     *      comfortable headroom — local-mode shuffles at the bench SFs
-    *      are MBs-to-low-GBs, far under the guard;
+    *      are MBs-to-low-GBs, far under the guard. Each JVM takes its
+    *      own `graft-scratch/<pid>` and first deletes the siblings of
+    *      dead PIDs ([[sweepDeadScratch]]): a killed run never runs
+    *      Spark's shutdown cleanup, and files stranded in tmpfs hold
+    *      RAM until reboot;
     *   3. none — Spark's default.
     * Only the [[local]] profile does this: on a cluster the site's
     * spark-submit owns local-dir placement (real executors get
@@ -142,7 +155,7 @@ object GraftConf {
     * emulates). `SPARK_LOCAL_DIRS`, when set, overrides all of it
     * (Spark's own precedence).
     */
-  private def localScratchDir: Option[String] = {
+  private def chooseScratchDir: Option[String] = {
     val explicit = sys.env.get("GRAFT_LOCAL_DIR")
       .orElse(sys.props.get("graft.localDir")).map(_.trim).filter(_.nonEmpty)
     explicit match {
@@ -151,11 +164,34 @@ object GraftConf {
       case None =>
         val shm = new java.io.File("/dev/shm")
         val minFree = 32L * 1024 * 1024 * 1024
-        if (shm.isDirectory && shm.canWrite && shm.getUsableSpace > minFree)
-          Some(new java.io.File(shm, "graft-scratch").getAbsolutePath)
-        else None
+        if (shm.isDirectory && shm.canWrite && shm.getUsableSpace > minFree) {
+          val parent = new java.io.File(shm, "graft-scratch")
+          sweepDeadScratch(parent)
+          val own = new java.io.File(parent, ProcessHandle.current().pid().toString)
+          own.mkdirs()
+          // runs after Spark's own shutdown hooks have removed their
+          // subdirectories, and deletes only an empty directory
+          own.deleteOnExit()
+          Some(own.getAbsolutePath)
+        } else None
     }
   }
+
+  /** Deletes the `<pid>` subdirectories of `parent` whose process is
+    * gone. Only numeric names are touched, and a live PID's directory
+    * is kept even if the PID was reused (a leftover, never a loss).
+    */
+  private[graft] def sweepDeadScratch(parent: java.io.File): Unit =
+    Option(parent.listFiles()).toSeq.flatten
+      .filter(d => d.isDirectory && d.getName.matches("\\d{1,18}"))
+      .filter(d => ProcessHandle.of(d.getName.toLong).isEmpty)
+      .foreach { d =>
+        // walk does not follow symlinks: only the dead run's own files go
+        val paths = java.nio.file.Files.walk(d.toPath)
+        try paths.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+          .forEach(p => scala.util.Try(java.nio.file.Files.deleteIfExists(p)))
+        finally paths.close()
+      }
 
   /** Like [[local]] but WITHOUT a master: for mains launched via
     * spark-submit, which owns master/deploy-mode (`--master local[*]`

@@ -312,22 +312,31 @@ object Pipeline {
     * the warm-start input; serving paths use [[hostRanksFor]] instead,
     * which prunes to the requested hosts' buckets.
     */
-  def hostRanks(spark: SparkSession, outDir: String): Option[DataFrame] =
-    ranksArtifact(spark, outDir).map(_.select(col("host"), col("rank")))
+  def hostRanks(spark: SparkSession, outDir: String): Option[DataFrame] = {
+    val resolved = graft.sinks.StoreGen.resolve(spark, s"$outDir/links")
+    val p = new org.apache.hadoop.fs.Path(resolved, RanksArtifact)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(p)) Some(spark.read.parquet(p.toString).select(col("host"), col("rank")))
+    else None
+  }
 
   /** SERVING read of the live ranks: only the requested hosts'
-    * `rank_bucket` partitions are listed/scanned (driver-side bucket
-    * recompute — no Spark job to build the pruned plan), so a rank
-    * lookup against a crawl-scale `_RANKS` artifact touches
-    * ≤ hosts.size of [[graft.sinks.LinkStore.NumBuckets]] partitions
-    * instead of the full host table. Empty frame when no ranks
+    * `rank_bucket=` directories of `_RANKS` are listed and scanned
+    * ([[graft.sinks.StoreGen.readPartitions]]), so a rank lookup
+    * against a crawl-scale artifact touches ≤ hosts.size of
+    * [[graft.sinks.LinkStore.NumBuckets]] partitions instead of the
+    * full host table. Building the frame runs no Spark job once the
+    * generation's `_RANKS` schema is memoized (its first bind infers
+    * it: a listing job over every bucket plus a footer job); a whole
+    * `_RANKS` read paid both on every call. Empty frame when no ranks
     * artifact is published.
     */
   def hostRanksFor(spark: SparkSession, outDir: String,
-      hosts: Seq[String]): DataFrame =
-    ranksArtifact(spark, outDir) match {
+      hosts: Seq[String]): DataFrame = {
+    val buckets = hosts.map(LinkStore.bucketOfDomain).distinct
+    graft.sinks.StoreGen.readPartitions(spark, s"$outDir/links", RanksArtifact,
+        "rank_bucket", buckets) match {
       case Some(r) =>
-        val buckets = hosts.map(LinkStore.bucketOfDomain).distinct
         r.filter(col("rank_bucket").isin(buckets: _*) &&
             col("host").isin(hosts: _*))
           .select(col("host"), col("rank"))
@@ -335,19 +344,13 @@ object Pipeline {
         import spark.implicits._
         Seq.empty[(String, Double)].toDF("host", "rank")
     }
+  }
 
   /** One host's live rank via the pruned [[hostRanksFor]] read. */
   def hostRankOf(spark: SparkSession, outDir: String,
       host: String): Option[Double] =
     hostRanksFor(spark, outDir, Seq(host)).collect()
       .headOption.map(_.getDouble(1))
-
-  private def ranksArtifact(spark: SparkSession, outDir: String): Option[DataFrame] = {
-    val resolved = graft.sinks.StoreGen.resolve(spark, s"$outDir/links")
-    val p = new org.apache.hadoop.fs.Path(resolved, RanksArtifact)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.parquet(p.toString)) else None
-  }
 
   /** `_RANKS` layout: parquet partitioned by `rank_bucket` =
     * xxhash64(host) mod NumBuckets — the same bucketing the link store
@@ -642,13 +645,18 @@ object Pipeline {
 
   /** Serve the store over HTTP — the reference's `cmd/linksapi`
     * (POST /api/links with CORS + rate limiting). Each request binds a
-    * FRESH partition-pruned domain read (bucket computed driver-side
-    * with no Spark job — LinkStore.bucketOfDomain is pure), so the
-    * per-request scan is 1/NumBuckets of the store plus row-group
-    * pruning, and a store rewrite (compactStream/foldSegments) is
-    * picked up by the very next request — caching DataFrames here
-    * would pin deleted part files after a rewrite. `port = 0` picks an
-    * ephemeral port.
+    * FRESH read of the live generation's one bucket directory
+    * (StoreGen.readPartitions), so the per-request scan is
+    * 1/NumBuckets of the store plus row-group pruning, and a store
+    * rewrite (compactStream/foldSegments) is picked up by the very next
+    * request. What carries across requests is metadata only: the
+    * schema of each store's live generation, memoized per generation
+    * directory. That is safe because a committed generation is never
+    * written again and the memo is replaced when `_CURRENT` moves.
+    * DataFrames are not kept: one bound to a generation would read
+    * files that the second fold after it prunes. So after the first
+    * request of a generation, a bind runs no Spark job and each route
+    * runs only its query's job. `port = 0` picks an ephemeral port.
     */
   def serveLinkApi(spark: SparkSession, outDir: String, port: Int = 8010,
       rateLimitMax: Int = 50): api.LinkApiServer =
@@ -662,11 +670,12 @@ object Pipeline {
         try spark.catalog.refreshByPath(s"$outDir/$s")
         catch { case _: Exception => () } // absent sub-store: nothing cached
       },
-      // rank serving rides the same server: pruned _RANKS read per
-      // request; stores without a published ranks artifact just 404
+      // rank serving rides the same server: a read of the requested
+      // host's _RANKS bucket directory per request; stores without a
+      // published ranks artifact just 404
       rankOf = Some(host => hostRankOf(spark, outDir, host)),
-      // page serving too: fresh partition-pruned eTLD+1 page-store
-      // read per request, the page-side sibling of the links binding
+      // page serving too: a fresh read of the eTLD+1's page-store
+      // bucket directory per request, the sibling of the links binding
       pageDbOf = Some(host => pageDb(spark, outDir, host))).start()
 
   final case class ExportStats(

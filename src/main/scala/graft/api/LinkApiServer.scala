@@ -43,18 +43,24 @@ final class LinkApiServer(
     onStale: () => Unit = () => (),
     // beyond the reference's surface: when set, POST /api/ranks serves
     // the store-maintained PageRank of one host (Pipeline.hostRankOf —
-    // a partition-pruned read of the live generation's _RANKS)
+    // a read of the host's one rank_bucket directory of the live
+    // generation's _RANKS; with the generation's schema memoized, the
+    // lookup's collect is its only Spark job)
     rankOf: Option[String => Option[Double]] = None,
     // beyond the reference's surface: when set, POST /api/pages serves
-    // the page records of one host (Pipeline.pageDb — a fresh
-    // partition-pruned eTLD+1 read of the page store per request, same
-    // bind-late posture as /api/links)
+    // the page records of one host (Pipeline.pageDb — a fresh read of
+    // the eTLD+1's page-store bucket directory per request, same
+    // bind-late posture as /api/links; the bind reuses the memoized
+    // schema of the live generation, safe because a committed
+    // generation is never rewritten, and runs no Spark job)
     pageDbOf: Option[String => PageDb] = None,
     // per-request time budget on store reads — the reference caps
     // every DB query at 61 s (controller.go:95-104 SetMaxTime +
     // context.WithTimeout -> "Query timeout"); without it a
     // pathological store read holds an HTTP worker thread forever
     queryBudgetMs: Long = 61000) {
+
+  import LinkApiServer.{causeChainText, isAnalysisError, isMissingRoot, isStaleStore}
 
   // isRateLimited (controller.go:282-307): fixed window anchored at the
   // first request, counter reset when the window expires
@@ -406,6 +412,10 @@ final class LinkApiServer(
     * never created can't appear by waiting, and a budget-long
     * sleep-retry loop per request against a misconfigured path would
     * let a modest request rate pin the whole worker pool.
+    * Stale-store failures never fall through to the unknown-failure
+    * retry below (their budgets above are the whole policy), and
+    * neither do analysis errors without a stale marker: a bad plan
+    * fails the same way on every rebind.
     */
   private def withStoreRetry[T](f: => T): T = {
     val t0 = System.nanoTime()
@@ -437,6 +447,7 @@ final class LinkApiServer(
           onStale()
           Thread.sleep(math.min(25L * attempt, 400L))
         case e: Exception if unknown < unknownAttempts &&
+            !isStaleStore(e) && !isAnalysisError(e) &&
             // never swallow the deadline's interrupt (or an interrupted
             // Spark await wrapping it) — that is the 504 path
             !causeChainText(e).contains("InterruptedException") &&
@@ -449,44 +460,6 @@ final class LinkApiServer(
     }
     throw new IllegalStateException("unreachable")
   }
-
-  /** Missing ROOT only: a PATH_NOT_FOUND naming a `_gen-` directory is
-    * a pruned GENERATION (the store moved on while we were binding) —
-    * fully retryable, not a misconfigured path. Only a vanished path
-    * OUTSIDE the generation protocol means the store was never created.
-    */
-  private def isMissingRoot(e: Throwable): Boolean = {
-    val msgs = causeChainText(e)
-    // the generation dir must appear as an actual PATH SEGMENT
-    // (/_gen-<n> followed by a non-word char or end): a plain
-    // substring test would let a misconfigured root whose own path
-    // contains "_gen-" eat the full retry budget on every request
-    msgs.contains("PATH_NOT_FOUND") && !GenSegment.matcher(msgs).find()
-  }
-
-  private val GenSegment = java.util.regex.Pattern.compile("[/\\\\]_gen-\\d+\\b")
-
-  /** True when `e`'s cause chain (or executor-side stack flattened into
-    * a message) indicates files/paths that vanished under a reader.
-    * UNABLE_TO_INFER_SCHEMA is in the list because a generation dir
-    * mid-prune can still EXIST while its part files are already gone —
-    * the read then fails schema inference instead of file listing.
-    */
-  private def isStaleStore(e: Throwable): Boolean = {
-    val msgs = causeChainText(e)
-    msgs.contains("FileNotFoundException") ||
-      msgs.contains("PATH_NOT_FOUND") ||
-      msgs.contains("FILE_NOT_EXIST") ||
-      msgs.contains("UNABLE_TO_INFER_SCHEMA") ||
-      msgs.contains("ChecksumException") ||
-      msgs.contains("does not exist")
-  }
-
-  private def causeChainText(e: Throwable): String =
-    Iterator.iterate(e.asInstanceOf[Throwable])(_.getCause)
-      .takeWhile(_ != null).take(10)
-      .map(t => t.getClass.getName + ": " + String.valueOf(t.getMessage))
-      .mkString("\n")
 
   private sealed trait DomainResult
   private case object DomainMissing extends DomainResult
@@ -594,6 +567,53 @@ final class LinkApiServer(
 }
 
 object LinkApiServer {
+  /** Missing ROOT only: a PATH_NOT_FOUND naming a `_gen-` directory is
+    * a pruned GENERATION (the store moved on while we were binding) —
+    * fully retryable, not a misconfigured path. Only a vanished path
+    * OUTSIDE the generation protocol means the store was never created.
+    */
+  private[graft] def isMissingRoot(e: Throwable): Boolean = {
+    val msgs = causeChainText(e)
+    // the generation dir must appear as an actual PATH SEGMENT
+    // (/_gen-<n> followed by a non-word char or end): a plain
+    // substring test would let a misconfigured root whose own path
+    // contains "_gen-" eat the full retry budget on every request
+    msgs.contains("PATH_NOT_FOUND") && !GenSegment.matcher(msgs).find()
+  }
+
+  private val GenSegment = java.util.regex.Pattern.compile("[/\\\\]_gen-\\d+\\b")
+
+  /** True when `e`'s cause chain (or executor-side stack flattened into
+    * a message) indicates files/paths that vanished under a reader.
+    * UNABLE_TO_INFER_SCHEMA is in the list because a generation dir
+    * mid-prune can still EXIST while its part files are already gone —
+    * the read then fails schema inference instead of file listing.
+    */
+  private[graft] def isStaleStore(e: Throwable): Boolean = {
+    val msgs = causeChainText(e)
+    msgs.contains("FileNotFoundException") ||
+      msgs.contains("PATH_NOT_FOUND") ||
+      msgs.contains("FILE_NOT_EXIST") ||
+      msgs.contains("UNABLE_TO_INFER_SCHEMA") ||
+      msgs.contains("ChecksumException") ||
+      msgs.contains("does not exist")
+  }
+
+  private[graft] def causeChainText(e: Throwable): String =
+    Iterator.iterate(e.asInstanceOf[Throwable])(_.getCause)
+      .takeWhile(_ != null).take(10)
+      .map(t => t.getClass.getName + ": " + String.valueOf(t.getMessage))
+      .mkString("\n")
+
+  /** A Spark analysis error anywhere in the cause chain: the plan is
+    * wrong, not the files under it, so a rebind cannot fix it (checked
+    * after [[isStaleStore]], whose PATH_NOT_FOUND and
+    * UNABLE_TO_INFER_SCHEMA are analysis errors too).
+    */
+  private[api] def isAnalysisError(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(10)
+      .exists(_.isInstanceOf[org.apache.spark.sql.AnalysisException])
+
   /** Store read outlived the request's query budget (the reference's
     * "Query timeout", controller.go:104) — mapped to 504 in `safely`.
     */

@@ -26,9 +26,12 @@ object LinkStore {
 
   /** Scala-side mirror of [[bucketOf]] for driver-side pruning: Spark's
     * `xxhash64` is XXH64 seed 42 over the UTF-8 bytes and `pmod` the
-    * positive modulo — recomputed here directly, so building a
-    * domain-pruned read costs NO Spark job (a serving path calls this
-    * per request). LinkDbSpec pins equality with the Column version.
+    * positive modulo — recomputed here directly, so naming a domain's
+    * bucket directory costs no Spark job. The rest of a serving bind
+    * is [[StoreGen.readPartitions]]: it lists only that directory and
+    * takes the schema from its per-generation memo, so after the first
+    * bind of a generation the whole bind runs no job. LinkDbSpec pins
+    * equality with the Column version.
     */
   def bucketOfDomain(domain: String): Int = {
     val b = domain.getBytes(java.nio.charset.StandardCharsets.UTF_8)
@@ -76,12 +79,18 @@ object LinkStore {
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(StoreGen.resolve(spark, path))
 
-  /** Domain-filtered read: the bucket predicate prunes partitions (only
-    * 1/NumBuckets of files are listed/read), the domain predicate
-    * prunes row groups and rows.
+  /** Domain-filtered read: only the domain's bucket directory is listed
+    * and read ([[StoreGen.readPartitions]]); the bucket predicate stays
+    * a partition filter on that scan and the domain predicate prunes
+    * row groups and rows.
     */
   def readDomain(spark: SparkSession, path: String, domain: String): DataFrame =
-    read(spark, path)
-      .filter(col("domain_bucket") === bucketOfDomain(domain))
+    readBucket(spark, path, bucketOfDomain(domain))
       .filter(col("link_domain") === domain)
+
+  /** One `domain_bucket` of a link or page store, bucket predicate kept. */
+  private[sinks] def readBucket(spark: SparkSession, path: String, bucket: Int): DataFrame =
+    StoreGen.readPartitions(spark, path, "", "domain_bucket", Seq(bucket))
+      .get // sub = "": the data of a resolved generation is always present
+      .filter(col("domain_bucket") === bucket)
 }

@@ -29,9 +29,10 @@ object PageStore {
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(StoreGen.resolve(spark, path))
 
-  /** eTLD+1-filtered read with partition + row-group pruning. */
+  /** eTLD+1-filtered read of the domain's bucket directory only, with
+    * partition + row-group pruning (see [[LinkStore.readDomain]]).
+    */
   def readDomain(spark: SparkSession, path: String, domain: String): DataFrame =
-    read(spark, path)
-      .filter(col("domain_bucket") === LinkStore.bucketOfDomain(domain))
+    LinkStore.readBucket(spark, path, LinkStore.bucketOfDomain(domain))
       .filter(col("page_domain") === domain)
 }

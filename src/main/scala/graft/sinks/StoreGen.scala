@@ -1,7 +1,11 @@
 package graft.sinks
 
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
+
+import java.io.FileNotFoundException
+import java.util.concurrent.ConcurrentHashMap
 
 /** Generation-directory commit protocol for the link/page stores —
   * replaces the old rename-swap (live → .old, tmp → live), whose
@@ -77,6 +81,85 @@ object StoreGen {
   }
 
   private def genId(name: String): Long = name.stripPrefix(GenPrefix).toLong
+
+  /** Schema of `<gen>/<sub>` per (store root, sub), valid while the
+    * live generation is the same directory with the same mtime. A
+    * committed generation is immutable (commit writes only the pointer
+    * and prunes OTHER generations), so its schema cannot change under
+    * the entry; the mtime guards against a root that was deleted and
+    * re-published under a reused generation name. One entry per key,
+    * replaced when `_CURRENT` moves; legacy roots are never memoized.
+    */
+  private final case class SchemaMemo(gen: String, mtime: Long, schema: StructType)
+  private val schemaMemo = new ConcurrentHashMap[(String, String), SchemaMemo]()
+
+  /** Point read of the live generation: lists ONLY the requested
+    * `<partCol>=<v>` directories under `<gen>/<sub>` (`sub` = "" for
+    * the store's own data, e.g. `_RANKS` for an artifact riding in the
+    * generation) and reads them with `basePath` set, so `partCol` stays
+    * a partition column and the caller's predicate on it still prunes.
+    * The schema comes from [[schemaMemo]]: after the first bind of a
+    * generation, a bind runs NO Spark job — a whole-store
+    * `spark.read.parquet` pays a partition-discovery job (one task per
+    * bucket directory) plus a footer schema-inference job on every
+    * call. A legacy plain root (no `_CURRENT`) is inferred on every
+    * call: nothing marks its files immutable.
+    *
+    * A requested directory that does not exist contributes nothing
+    * (all absent: an empty frame with the memoized schema) — but only
+    * after re-checking that the generation still exists. A pruned
+    * generation, or a pointer-less root in the swap window, fails as a
+    * missing file so the serving retry rebinds instead of answering an
+    * empty 200. None when the live generation carries no `sub`.
+    */
+  def readPartitions(spark: SparkSession, root: String, sub: String,
+      partCol: String, values: Seq[Int]): Option[DataFrame] = {
+    val f = fs(spark, root)
+    val live = currentGenName(spark, root)
+    val gen = live.fold(root)(g => s"$root/$g")
+    val base = if (sub.isEmpty) gen else s"$gen/$sub"
+    def stale(): Nothing = throw new FileNotFoundException(
+      s"no live generation of store $root at $gen (pruned or mid-swap)")
+    def genGone: Boolean = live.nonEmpty && !f.exists(new Path(gen))
+    if (live.isEmpty && inSwapWindow(f, root)) stale()
+    if (sub.nonEmpty && !f.exists(new Path(base)))
+      return if (genGone) stale() else None
+    val schema = live match {
+      case None => spark.read.parquet(base).schema
+      case Some(_) =>
+        val mtime =
+          try f.getFileStatus(new Path(gen)).getModificationTime
+          catch { case _: FileNotFoundException => stale() }
+        val key = (root, sub)
+        Option(schemaMemo.get(key))
+          .filter(m => m.gen == gen && m.mtime == mtime)
+          .fold {
+            val s = spark.read.parquet(base).schema
+            schemaMemo.put(key, SchemaMemo(gen, mtime, s))
+            s
+          }(_.schema)
+    }
+    val wanted = values.distinct.map(v => s"$base/$partCol=$v")
+    val present = wanted.filter(p => f.exists(new Path(p)))
+    if (present.size < wanted.size && genGone) stale()
+    Some(
+      if (present.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+      else spark.read.schema(schema).option("basePath", base).parquet(present: _*))
+  }
+
+  /** A root without `_CURRENT` whose only entries are protocol ones
+    * (generation dirs, lease, checksum sidecars): the pointer is
+    * between delete and create (a copy+delete rename on an object
+    * store), not a legacy plain store, which holds data entries.
+    */
+  private def inSwapWindow(f: FileSystem, root: String): Boolean = {
+    val r = new Path(root)
+    f.exists(r) && {
+      val names = f.listStatus(r).map(_.getPath.getName)
+      names.exists(_.startsWith(GenPrefix)) &&
+        names.forall(n => n.startsWith("_") || n.startsWith("."))
+    }
+  }
 
   /** Phase 1: materialize the NEXT generation's data dir via `write`
     * (which gets the dir path) without touching the pointer or the

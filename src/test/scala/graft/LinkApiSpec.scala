@@ -466,6 +466,40 @@ class LinkApiSpec extends SparkSpec {
     } finally srv.stop()
   }
 
+  test("a deterministic analysis error is answered 500 on its first bind") {
+    val calls = new java.util.concurrent.atomic.AtomicInteger(0)
+    val rebinds = new java.util.concurrent.atomic.AtomicInteger(0)
+    val badPlan: String => LinkDb = { _ =>
+      calls.incrementAndGet()
+      // no stale-store marker: the column does not exist in any generation
+      new LinkDb(spark.range(1).toDF("id").select("no_such_column"))
+    }
+    val srv = new LinkApiServer(badPlan, port = 0,
+      onStale = () => { rebinds.incrementAndGet(); () }).start()
+    try {
+      val resp = post(srv.boundPort, """{"domain":"d3.com","limit":5}""")
+      assert(resp.statusCode() == 500, resp.body())
+      assert(resp.body().contains("ErrorFailedLinks"))
+      assert(calls.get() == 1, s"attempts=${calls.get()}")
+      assert(rebinds.get() == 0)
+    } finally srv.stop()
+  }
+
+  test("a never-created store root gets exactly the missing-root binds") {
+    val root = java.nio.file.Files.createTempDirectory("noroot").toString + "/never"
+    val calls = new java.util.concurrent.atomic.AtomicInteger(0)
+    val srv = new LinkApiServer(domain => {
+      calls.incrementAndGet()
+      Pipeline.linkDb(spark, root, domain)
+    }, port = 0).start()
+    try {
+      val resp = post(srv.boundPort, """{"domain":"d3.com","limit":5}""")
+      assert(resp.statusCode() == 500, resp.body())
+      // missingRootAttempts = 2; the unknown-failure retry must not add more
+      assert(calls.get() == 2, s"attempts=${calls.get()}")
+    } finally srv.stop()
+  }
+
   test("a store read inside the budget is unaffected by the deadline") {
     val srv = new LinkApiServer(_ => db, port = 0, queryBudgetMs = 61000).start()
     try {
