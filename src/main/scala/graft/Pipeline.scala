@@ -203,9 +203,10 @@ object Pipeline {
     * would delete the only copy before the new one is known good, and
     * the old rename-swap invalidated in-flight readers. The previous
     * generation stays on disk until the NEXT commit, so a reader that
-    * resolved it always finishes against intact files; readers that
-    * outlive two folds are healed by the serving layer's rebind-retry
-    * (LinkApiServer.queryWithRetry). Single writer per store root,
+    * resolved it always finishes against intact files; a reader that
+    * outlives two folds is retried by the serving layer, because the
+    * store's generation moved under it (LinkApiServer.storeRead).
+    * Single writer per store root,
     * ENFORCED by the [[graft.sinks.StoreLease]] writer lease: a second
     * scheduled rewrite refuses loudly instead of racing
     * StoreGen.prepare's stray-generation prune.
@@ -657,19 +658,22 @@ object Pipeline {
     * files that the second fold after it prunes. So after the first
     * request of a generation, a bind runs no Spark job and each route
     * runs only its query's job. `port = 0` picks an ephemeral port.
+    *
+    * The server's generation token is the pair of `_CURRENT` targets of
+    * links and pages (`_RANKS` rides in the links generation). A failed
+    * request is retried only when that pair moved during the attempt or
+    * the read met a `StoreGen.StaleGeneration`; anything else is a 500
+    * on the first attempt. No listing cache needs refreshing before a
+    * retry: every serving read names explicit `_gen-N` paths, and a
+    * committed generation is never rewritten.
     */
   def serveLinkApi(spark: SparkSession, outDir: String, port: Int = 8010,
       rateLimitMax: Int = 50): api.LinkApiServer =
     new api.LinkApiServer(domain => linkDb(spark, outDir, domain), port,
       rateLimitMax = rateLimitMax,
-      // a swap mid-request leaves the shared FileStatusCache holding
-      // the dead store's listing; drop BOTH stores' listings before
-      // the server's rebind retry (see LinkApiServer.withStoreRetry —
-      // links and pages fold in one publish, so either can go stale)
-      onStale = () => Seq("links", "pages").foreach { s =>
-        try spark.catalog.refreshByPath(s"$outDir/$s")
-        catch { case _: Exception => () } // absent sub-store: nothing cached
-      },
+      storeGeneration = () =>
+        Seq("links", "pages").map(s => graft.sinks.StoreGen.resolve(spark, s"$outDir/$s"))
+          .mkString(","),
       // rank serving rides the same server: a read of the requested
       // host's _RANKS bucket directory per request; stores without a
       // published ranks artifact just 404

@@ -2,6 +2,7 @@ package graft.api
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import graft.functions.UrlFns
+import graft.sinks.StoreGen
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
@@ -20,6 +21,13 @@ import java.nio.charset.StandardCharsets
   * partition-pruned store read, so each request scans only the
   * requested domain's bucket; the collect stays the bounded ≤300-row
   * serving window of LinkDb.query.
+  *
+  * `storeGeneration` names the store generation the routes read
+  * (Pipeline.serveLinkApi: the `_CURRENT` targets of links and pages).
+  * A failed store read is retried only when that token moved during
+  * the attempt or the failure carries a `StoreGen.StaleGeneration`;
+  * the default constant token means a server over fixed frames retries
+  * nothing but the latter (see [[storeRead]]).
   *
   * Divergence (documented): the reference rate-limits on Go's
   * `r.RemoteAddr`, which includes the EPHEMERAL client port — every
@@ -40,7 +48,7 @@ final class LinkApiServer(
     rateWindowMs: Long = 15L * 60 * 1000,
     clock: () => Long = () => System.currentTimeMillis(),
     sweepThreshold: Int = 100000,
-    onStale: () => Unit = () => (),
+    storeGeneration: () => String = () => "",
     // beyond the reference's surface: when set, POST /api/ranks serves
     // the store-maintained PageRank of one host (Pipeline.hostRankOf —
     // a read of the host's one rank_bucket directory of the live
@@ -59,8 +67,6 @@ final class LinkApiServer(
     // context.WithTimeout -> "Query timeout"); without it a
     // pathological store read holds an HTTP worker thread forever
     queryBudgetMs: Long = 61000) {
-
-  import LinkApiServer.{causeChainText, isAnalysisError, isMissingRoot, isStaleStore}
 
   // isRateLimited (controller.go:282-307): fixed window anchored at the
   // first request, counter reset when the window expires
@@ -214,8 +220,14 @@ final class LinkApiServer(
       "paths" -> JObject(List(links, health) ++ ranks ++ pages ++ List(docs))))
   }
 
-  /** HandlerGetDomainLinks (handler.go:24-74), decision for decision. */
-  private def handleLinks(ex: HttpExchange): Unit = {
+  /** The POST routes' shared preamble (handler.go:24-40): method →
+    * 405, rate limit → 429, unparseable body → 400, each envelope under
+    * the route's `function` name `fn`. `handle` gets the parsed body
+    * and that route's envelope builder.
+    */
+  private def postRoute(ex: HttpExchange, fn: String)(
+      handle: (JValue, (String, String) => String) => Unit): Unit = {
+    def err(code: String, msg: String): String = envelope(fn, code, msg)
     if (ex.getRequestMethod != "POST")
       return send(ex, 405, err("ErrorMethod", "Method Not Allowed"))
     val caller = ex.getRemoteAddress.getAddress.getHostAddress
@@ -226,140 +238,97 @@ final class LinkApiServer(
       try Some(JsonMethods.parse(body))
       catch { case _: Exception => None }
     parsed match {
-      case None =>
-        send(ex, 400, err("ErrorParsing", "Error parsing request"))
-      case Some(j) =>
-        domainOf(j) match {
-          case DomainMissing =>
-            send(ex, 400, err("ErrorNoDomain", "Domain is required"))
-          case DomainUnparseable =>
-            send(ex, 400, err("ErrorParsing", "Error parsing domain"))
-          case DomainInvalid =>
-            send(ex, 400, err("ErrorInvalidDomain", "Invalid domain"))
-          case DomainOk(domain) =>
-            val out = queryWithRetry(domain, request(j, domain))
-            send(ex, 200, JsonMethods.compact(JArray(out.toList.map(render))))
-        }
+      case None => send(ex, 400, err("ErrorParsing", "Error parsing request"))
+      case Some(j) => handle(j, err)
     }
   }
+
+  /** HandlerGetDomainLinks (handler.go:24-74), decision for decision. */
+  private def handleLinks(ex: HttpExchange): Unit =
+    postRoute(ex, "HandlerGetDomainLinks") { (j, err) =>
+      domainOf(j) match {
+        case DomainMissing =>
+          send(ex, 400, err("ErrorNoDomain", "Domain is required"))
+        case DomainUnparseable =>
+          send(ex, 400, err("ErrorParsing", "Error parsing domain"))
+        case DomainInvalid =>
+          send(ex, 400, err("ErrorInvalidDomain", "Invalid domain"))
+        case DomainOk(domain) =>
+          val out = storeRead(resolve(domain).query(request(j, domain)))
+          send(ex, 200, JsonMethods.compact(JArray(out.toList.map(render))))
+      }
+    }
 
   /** POST /api/ranks — rank lookup for one host, same envelope rules
     * as /api/links (method, rate limit, parse/validation errors).
     * Unknown host (or a store without a published `_RANKS`) is 404:
     * "no rank" is an answer about the data, not a request error.
     */
-  private def handleRanks(ex: HttpExchange): Unit = {
-    def err(code: String, msg: String): String = envelope("HandlerGetHostRank", code, msg)
-    if (ex.getRequestMethod != "POST")
-      return send(ex, 405, err("ErrorMethod", "Method Not Allowed"))
-    val caller = ex.getRemoteAddress.getAddress.getHostAddress
-    if (isRateLimited(caller))
-      return send(ex, 429, err("ErrorTooManyRequests", "Too Many Requests"))
-    val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-    val parsed =
-      try Some(JsonMethods.parse(body))
-      catch { case _: Exception => None }
-    parsed match {
-      case None =>
-        send(ex, 400, err("ErrorParsing", "Error parsing request"))
-      case Some(j) =>
-        (j \ "host") match {
-          case JString(raw) if raw.nonEmpty =>
-            val host = raw.trim.toLowerCase
-            if (!host.matches(UrlFns.DomainRegex))
-              send(ex, 400, err("ErrorInvalidDomain", "Invalid host"))
-            else rankWithRetry(host) match {
-              case Some(r) => send(ex, 200,
-                s"""{"host":${JsonMethods.compact(JString(host))},"rank":$r}""")
-              case None =>
-                send(ex, 404, err("ErrorUnknownHost", "Host not found"))
-            }
-          case _ =>
-            send(ex, 400, err("ErrorNoDomain", "Host is required"))
-        }
+  private def handleRanks(ex: HttpExchange): Unit =
+    postRoute(ex, "HandlerGetHostRank") { (j, err) =>
+      (j \ "host") match {
+        case JString(raw) if raw.nonEmpty =>
+          val host = raw.trim.toLowerCase
+          if (!host.matches(UrlFns.DomainRegex))
+            send(ex, 400, err("ErrorInvalidDomain", "Invalid host"))
+          else storeRead(rankOf.get(host)) match {
+            case Some(r) => send(ex, 200,
+              s"""{"host":${JsonMethods.compact(JString(host))},"rank":$r}""")
+            case None =>
+              send(ex, 404, err("ErrorUnknownHost", "Host not found"))
+          }
+        case _ =>
+          send(ex, 400, err("ErrorNoDomain", "Host is required"))
+      }
     }
-  }
 
   /** POST /api/pages — page-record lookup for one host, same envelope
     * rules as /api/links (method, rate limit, parse/validation
-    * errors, swap-retry). Request: `host` (required, exact
+    * errors, store retry). Request: `host` (required, exact
     * case-insensitive page host), optional `path`/`title` ("any"
     * substring/regex filters — PageDb's vocabulary), `limit`, `page`.
     * An unknown host returns the empty array like an unmatched
     * domain on /api/links: "no pages" is an answer, not an error.
     */
-  private def handlePages(ex: HttpExchange): Unit = {
-    def err(code: String, msg: String): String = envelope("HandlerGetHostPages", code, msg)
-    if (ex.getRequestMethod != "POST")
-      return send(ex, 405, err("ErrorMethod", "Method Not Allowed"))
-    val caller = ex.getRemoteAddress.getAddress.getHostAddress
-    if (isRateLimited(caller))
-      return send(ex, 429, err("ErrorTooManyRequests", "Too Many Requests"))
-    val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-    val parsed =
-      try Some(JsonMethods.parse(body))
-      catch { case _: Exception => None }
-    parsed match {
-      case None =>
-        send(ex, 400, err("ErrorParsing", "Error parsing request"))
-      case Some(j) =>
-        (j \ "host") match {
-          case JString(raw) if raw.nonEmpty =>
-            val host = raw.trim.toLowerCase
-            if (!host.matches(UrlFns.DomainRegex))
-              send(ex, 400, err("ErrorInvalidDomain", "Invalid host"))
-            else {
-              def str(v: JValue): Option[String] = v match {
-                case JString(s) if s.nonEmpty => Some(s)
-                case _ => None
-              }
-              def int(v: JValue, dflt: Int): Int = v match {
-                case JInt(n) => n.toInt
-                case JLong(n) => n.toInt
-                case _ => dflt
-              }
-              // rlike compiles these user patterns inside the Spark job
-              // (PageDb.anyMatch wraps them as "(?i)pattern") — validate
-              // up front so a malformed regex is a 400 request error,
-              // not a 500 from the failed job
-              val badPattern = Seq(str(j \ "path"), str(j \ "title")).flatten.find { p =>
-                try { java.util.regex.Pattern.compile(s"(?i)$p"); false }
-                catch { case _: Exception => true }
-              }
-              if (badPattern.isDefined)
-                send(ex, 400, err("ErrorParsing", "Error parsing filter pattern"))
-              else {
-                val req = PageDbRequest(host,
-                  pathAny = str(j \ "path"), titleAny = str(j \ "title"),
-                  limit = int(j \ "limit", 100), page = int(j \ "page", 1))
-                val out = withDeadline(withStoreRetry(pageDbOf.get(host).query(req)))
-                send(ex, 200, JsonMethods.compact(JArray(out.toList.map(renderPage))))
-              }
+  private def handlePages(ex: HttpExchange): Unit =
+    postRoute(ex, "HandlerGetHostPages") { (j, err) =>
+      (j \ "host") match {
+        case JString(raw) if raw.nonEmpty =>
+          val host = raw.trim.toLowerCase
+          if (!host.matches(UrlFns.DomainRegex))
+            send(ex, 400, err("ErrorInvalidDomain", "Invalid host"))
+          else {
+            def str(v: JValue): Option[String] = v match {
+              case JString(s) if s.nonEmpty => Some(s)
+              case _ => None
             }
-          case _ =>
-            send(ex, 400, err("ErrorNoDomain", "Host is required"))
-        }
+            def int(v: JValue, dflt: Int): Int = v match {
+              case JInt(n) => n.toInt
+              case JLong(n) => n.toInt
+              case _ => dflt
+            }
+            // rlike compiles these user patterns inside the Spark job
+            // (PageDb.anyMatch wraps them as "(?i)pattern") — validate
+            // up front so a malformed regex is a 400 request error,
+            // not a 500 from the failed job
+            val badPattern = Seq(str(j \ "path"), str(j \ "title")).flatten.find { p =>
+              try { java.util.regex.Pattern.compile(s"(?i)$p"); false }
+              catch { case _: Exception => true }
+            }
+            if (badPattern.isDefined)
+              send(ex, 400, err("ErrorParsing", "Error parsing filter pattern"))
+            else {
+              val req = PageDbRequest(host,
+                pathAny = str(j \ "path"), titleAny = str(j \ "title"),
+                limit = int(j \ "limit", 100), page = int(j \ "page", 1))
+              val out = storeRead(pageDbOf.get(host).query(req))
+              send(ex, 200, JsonMethods.compact(JArray(out.toList.map(renderPage))))
+            }
+          }
+        case _ =>
+          send(ex, 400, err("ErrorNoDomain", "Host is required"))
+      }
     }
-  }
-
-  /** Same stale-store handling as [[queryWithRetry]]: a fold swapping
-    * generations mid-lookup re-resolves against the new pointer.
-    */
-  private def rankWithRetry(host: String): Option[Double] =
-    withDeadline(withStoreRetry(rankOf.get(host)))
-
-  /** A store rewrite (Pipeline.foldSegments/compactStream) that swaps
-    * directories mid-request invalidates the part files an in-flight
-    * scan already listed: the scan throws FileNotFound (or the bind
-    * itself sees a briefly-absent live dir during the rename window).
-    * Both mean the SAME thing — the store moved under us — and the fix
-    * is the same: re-resolve (which binds a FRESH read of the
-    * now-current store) and re-run. Bounded attempts: anything still
-    * failing after the swap settles is a real error and surfaces as
-    * the usual 500.
-    */
-  private def queryWithRetry(domain: String, req: LinkDbRequest): Seq[LinkOut] =
-    withDeadline(withStoreRetry(resolve(domain).query(req)))
 
   /** Runs a store read under the request's time budget on a separate
     * (daemon) thread; on expiry the worker is interrupted best-effort
@@ -367,7 +336,7 @@ final class LinkApiServer(
     * The deadline wraps the WHOLE retry loop (budget per request, not
     * per attempt — the reference's posture: one 61 s clock started at
     * query submission, controller.go:95-98). The interrupt lands in
-    * `withStoreRetry`'s sleep or the Spark action's await; a read that
+    * [[retryWhileMoved]]'s sleep or the Spark action's await; a read that
     * ignores it leaks a pool thread only until the underlying scan
     * finishes, and the HTTP worker is freed immediately either way.
     */
@@ -381,7 +350,7 @@ final class LinkApiServer(
         fut.cancel(true)
         throw new LinkApiServer.QueryTimeout
       case e: java.util.concurrent.ExecutionException =>
-        // unwrap so isStaleStore/error mapping upstream see the real one
+        // unwrap so `safely` maps the real failure (504 or 500)
         throw (e.getCause match { case ex: Exception => ex; case _ => e })
     }
   }
@@ -396,65 +365,41 @@ final class LinkApiServer(
       }
     })
 
-  /** The retry policy every serving route shares. Stale-store misses
-    * retry under the REQUEST's clock, not a fixed attempt count: each
-    * retry rebinds to the then-current generation, so any request that
-    * can complete within the budget eventually lands on a stable one —
-    * a fixed budget (8, then 12 attempts) kept losing to swap STORMS
-    * under load, where every per-attempt Spark job is slowed enough to
-    * straddle the next swap (a contended full-suite run exhausted 12).
-    * The enclosing [[withDeadline]] interrupts the loop at
-    * `queryBudgetMs` (one 61 s clock per request, the reference's
-    * SetMaxTime posture) and the elapsed guard below enforces the same
-    * budget even if that interrupt is lost, so a persistently stale
-    * store becomes a 504, never a hot loop. A bind-time missing ROOT
-    * (PATH_NOT_FOUND) still gets only one retry: a store that was
-    * never created can't appear by waiting, and a budget-long
-    * sleep-retry loop per request against a misconfigured path would
-    * let a modest request rate pin the whole worker pool.
-    * Stale-store failures never fall through to the unknown-failure
-    * retry below (their budgets above are the whole policy), and
-    * neither do analysis errors without a stale marker: a bad plan
-    * fails the same way on every rebind.
+  /** Every store read of a serving route: one clock per request
+    * (`queryBudgetMs`, enforced by [[withDeadline]]) around
+    * [[retryWhileMoved]]. The deadline is taken before the worker starts,
+    * so the retry loop's own budget check never outlives the deadline's.
     */
-  private def withStoreRetry[T](f: => T): T = {
-    val t0 = System.nanoTime()
-    val missingRootAttempts = 2
-    // r20 (the 1-in-~100 swap-window 500): failures whose text carries
-    // NO recognizable stale-store marker also get a bounded
-    // rebind-and-retry — a swap can surface through exception shapes
-    // the signature list can't enumerate (deep cause chains, engine
-    // rewordings), and one rebind against the settled store resolves
-    // them. BOUNDED attempts, unlike the stale path's request-clock
-    // budget: a deterministic store bug must keep failing fast as the
-    // usual 500, not burn 61 s per request (which would let a modest
-    // request rate pin the worker pool).
-    val unknownAttempts = 3
+  private def storeRead[T](read: => T): T = {
+    val deadline = System.nanoTime() + queryBudgetMs * 1000000L
+    withDeadline(retryWhileMoved(deadline)(read))
+  }
+
+  /** Runs `read` (which binds through `resolve`/`rankOf`/`pageDbOf`, so
+    * each attempt reads the then-current generation) and retries it
+    * only when the store moved under the attempt:
+    *   (a) its cause chain holds a `StoreGen.StaleGeneration` — the
+    *       generation it resolved was pruned, or `_CURRENT` was mid-swap;
+    *   (b) `storeGeneration` read before the attempt differs from the
+    *       one read after its failure — a fold committed meanwhile.
+    * Everything else fails on the first attempt: a never-created root,
+    * a bad plan or a deterministic bug fails the same way on every
+    * rebind, and the deadline's interrupt is the 504 path. No message
+    * text is read. A store still moving at the deadline is a 504, and
+    * the growing sleep keeps a swap storm from turning into a hot loop.
+    */
+  private def retryWhileMoved[T](deadline: Long)(read: => T): T = {
+    def moved(before: String): Boolean =
+      try storeGeneration() != before
+      catch { case _: StoreGen.StaleGeneration => true }
     var attempt = 1
-    var unknown = 0
     while (true) {
-      try return f
+      var before: Option[String] = None
+      try { before = Some(storeGeneration()); return read }
       catch {
-        case e: Exception if isStaleStore(e) &&
-            (if (isMissingRoot(e)) attempt < missingRootAttempts
-             else (System.nanoTime() - t0) / 1000000L < queryBudgetMs) =>
+        case e: Exception if LinkApiServer.staleGeneration(e) || before.exists(moved) =>
+          if (System.nanoTime() >= deadline) throw new LinkApiServer.QueryTimeout
           attempt += 1
-          // re-resolving alone is NOT enough: Spark's shared
-          // FileStatusCache hands a fresh read the PRE-swap listing
-          // (Hadoop-FileSystem renames never invalidate it) — the
-          // binder must refresh its paths (Pipeline.serveLinkApi wires
-          // spark.catalog.refreshByPath here)
-          onStale()
-          Thread.sleep(math.min(25L * attempt, 400L))
-        case e: Exception if unknown < unknownAttempts &&
-            !isStaleStore(e) && !isAnalysisError(e) &&
-            // never swallow the deadline's interrupt (or an interrupted
-            // Spark await wrapping it) — that is the 504 path
-            !causeChainText(e).contains("InterruptedException") &&
-            (System.nanoTime() - t0) / 1000000L < queryBudgetMs =>
-          unknown += 1
-          attempt += 1
-          onStale()
           Thread.sleep(math.min(25L * attempt, 400L))
       }
     }
@@ -551,10 +496,6 @@ final class LinkApiServer(
       "function" -> JString(fn),
       "error" -> JString(msg)))
 
-  /** The reference route's envelope (/api/links and its validators). */
-  private def err(code: String, msg: String): String =
-    envelope("HandlerGetDomainLinks", code, msg)
-
   private def send(ex: HttpExchange, status: Int, body: String): Unit = {
     val bytes = body.getBytes(StandardCharsets.UTF_8)
     ex.getResponseHeaders.set("Content-Type", "application/json")
@@ -567,52 +508,10 @@ final class LinkApiServer(
 }
 
 object LinkApiServer {
-  /** Missing ROOT only: a PATH_NOT_FOUND naming a `_gen-` directory is
-    * a pruned GENERATION (the store moved on while we were binding) —
-    * fully retryable, not a misconfigured path. Only a vanished path
-    * OUTSIDE the generation protocol means the store was never created.
-    */
-  private[graft] def isMissingRoot(e: Throwable): Boolean = {
-    val msgs = causeChainText(e)
-    // the generation dir must appear as an actual PATH SEGMENT
-    // (/_gen-<n> followed by a non-word char or end): a plain
-    // substring test would let a misconfigured root whose own path
-    // contains "_gen-" eat the full retry budget on every request
-    msgs.contains("PATH_NOT_FOUND") && !GenSegment.matcher(msgs).find()
-  }
-
-  private val GenSegment = java.util.regex.Pattern.compile("[/\\\\]_gen-\\d+\\b")
-
-  /** True when `e`'s cause chain (or executor-side stack flattened into
-    * a message) indicates files/paths that vanished under a reader.
-    * UNABLE_TO_INFER_SCHEMA is in the list because a generation dir
-    * mid-prune can still EXIST while its part files are already gone —
-    * the read then fails schema inference instead of file listing.
-    */
-  private[graft] def isStaleStore(e: Throwable): Boolean = {
-    val msgs = causeChainText(e)
-    msgs.contains("FileNotFoundException") ||
-      msgs.contains("PATH_NOT_FOUND") ||
-      msgs.contains("FILE_NOT_EXIST") ||
-      msgs.contains("UNABLE_TO_INFER_SCHEMA") ||
-      msgs.contains("ChecksumException") ||
-      msgs.contains("does not exist")
-  }
-
-  private[graft] def causeChainText(e: Throwable): String =
-    Iterator.iterate(e.asInstanceOf[Throwable])(_.getCause)
-      .takeWhile(_ != null).take(10)
-      .map(t => t.getClass.getName + ": " + String.valueOf(t.getMessage))
-      .mkString("\n")
-
-  /** A Spark analysis error anywhere in the cause chain: the plan is
-    * wrong, not the files under it, so a rebind cannot fix it (checked
-    * after [[isStaleStore]], whose PATH_NOT_FOUND and
-    * UNABLE_TO_INFER_SCHEMA are analysis errors too).
-    */
-  private[api] def isAnalysisError(e: Throwable): Boolean =
+  /** A `StoreGen.StaleGeneration` anywhere in `e`'s cause chain. */
+  private def staleGeneration(e: Throwable): Boolean =
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(10)
-      .exists(_.isInstanceOf[org.apache.spark.sql.AnalysisException])
+      .exists(_.isInstanceOf[StoreGen.StaleGeneration])
 
   /** Store read outlived the request's query budget (the reference's
     * "Query timeout", controller.go:104) — mapped to 504 in `safely`.

@@ -1,6 +1,6 @@
 package graft.sinks
 
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.fs.{ChecksumException, FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -28,8 +28,10 @@ import java.util.concurrent.ConcurrentHashMap
   *   - A reader that resolved generation N keeps a complete directory
   *     until generation N+2 commits (commit prunes to {N, N-1}), so
   *     any read that started before a swap finishes against intact
-  *     files; the serving layer's rebind-retry remains only as
-  *     belt-and-braces for readers that outlive TWO folds.
+  *     files. A reader that outlives TWO folds, or meets the pointer
+  *     mid-swap, is retried by the serving layer only when the store
+  *     moved: its failure carries a [[StaleGeneration]], or the
+  *     store's generation differs before and after the attempt.
   *   - Generation dirs and the pointer are underscore-prefixed, which
   *     Spark's file listing ignores — so a legacy PLAIN parquet store
   *     (part files directly under root) stays readable while its first
@@ -55,6 +57,13 @@ object StoreGen {
   private val Pointer = "_CURRENT"
   private val GenPrefix = "_gen-"
 
+  /** The store moved under a reader: the generation it resolved was
+    * pruned, or `_CURRENT` was mid-swap when it was read. A fresh
+    * resolve reads the new generation, so the serving layer retries on
+    * this type (LinkApiServer), never on message text.
+    */
+  final class StaleGeneration(msg: String) extends FileNotFoundException(msg)
+
   private def fs(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -70,10 +79,17 @@ object StoreGen {
     val ptr = new Path(root, Pointer)
     if (!f.exists(ptr)) None
     else {
-      val in = f.open(ptr)
       val name =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
+        try {
+          val in = f.open(ptr)
+          try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
+          finally in.close()
+        } catch {
+          // swapped between exists and open, or read between the
+          // pointer's rename and its checksum sidecar's (local FS)
+          case e @ (_: FileNotFoundException | _: ChecksumException) =>
+            throw new StaleGeneration(s"store pointer $ptr moved while read: $e")
+        }
       require(name.startsWith(GenPrefix) && !name.contains("/"),
         s"corrupt store pointer $ptr: '$name'")
       Some(name)
@@ -108,9 +124,10 @@ object StoreGen {
     * A requested directory that does not exist contributes nothing
     * (all absent: an empty frame with the memoized schema) — but only
     * after re-checking that the generation still exists. A pruned
-    * generation, or a pointer-less root in the swap window, fails as a
-    * missing file so the serving retry rebinds instead of answering an
-    * empty 200. None when the live generation carries no `sub`.
+    * generation, or a pointer-less root in the swap window, throws
+    * [[StaleGeneration]] so the serving retry rebinds instead of
+    * answering an empty 200. None when the live generation carries no
+    * `sub`.
     */
   def readPartitions(spark: SparkSession, root: String, sub: String,
       partCol: String, values: Seq[Int]): Option[DataFrame] = {
@@ -118,7 +135,7 @@ object StoreGen {
     val live = currentGenName(spark, root)
     val gen = live.fold(root)(g => s"$root/$g")
     val base = if (sub.isEmpty) gen else s"$gen/$sub"
-    def stale(): Nothing = throw new FileNotFoundException(
+    def stale(): Nothing = throw new StaleGeneration(
       s"no live generation of store $root at $gen (pruned or mid-swap)")
     def genGone: Boolean = live.nonEmpty && !f.exists(new Path(gen))
     if (live.isEmpty && inSwapWindow(f, root)) stale()
@@ -211,7 +228,8 @@ object StoreGen {
     // the pointer on local filesystems), nor the writer lease (the
     // committing writer HOLDS it — deleting it here would hand the
     // root to a second writer mid-commit). In-flight legacy readers
-    // rebind via the serving retry; after this, root holds only the
+    // fail in their Spark tasks; the serving retry rebinds them because
+    // the store's generation moved. After this, root holds only the
     // protocol entries. NOTE this loop is an ALLOWLIST: any future
     // root-level sibling artifact must either ride INSIDE the
     // generation dir (like _FOLDED and _RANKS do) or be added here,

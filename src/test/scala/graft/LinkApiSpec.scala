@@ -294,10 +294,11 @@ class LinkApiSpec extends SparkSpec {
     // never reads the store being swapped underneath it
     val snap = graft.sinks.PageStore.read(spark, s"$out/pages")
       .drop("domain_bucket").localCheckpoint(true)
-    val srv = new LinkApiServer(domain => Pipeline.linkDb(spark, out, domain),
-      port = 0, rateLimitMax = Int.MaxValue,
-      onStale = () => spark.catalog.refreshByPath(s"$out/pages"),
-      pageDbOf = Some(h => Pipeline.pageDb(spark, out, h))).start()
+    // the production binding and generation token: the first swap
+    // migrates the imported plain store to generations, pruning part
+    // files that in-flight reads listed, and only the moved token says
+    // so (the read fails in a Spark task, not in StoreGen)
+    val srv = Pipeline.serveLinkApi(spark, out, port = 0, rateLimitMax = Int.MaxValue)
     try {
       val port = srv.boundPort
       val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
@@ -347,11 +348,9 @@ class LinkApiSpec extends SparkSpec {
     // here — this test is about availability, not arithmetic)
     LinkCompaction.compact(graft.sources.WatSource.links(spark, Seq(fixture), Nil))
       .write.mode("overwrite").parquet(s"$out/links_stream/batch=0")
-    // same binding as Pipeline.serveLinkApi, rate limit out of the way
-    // so EVERY request exercises the store read
-    val srv = new LinkApiServer(domain => Pipeline.linkDb(spark, out, domain),
-      port = 0, rateLimitMax = Int.MaxValue,
-      onStale = () => spark.catalog.refreshByPath(s"$out/links")).start()
+    // the production binding and generation token, rate limit out of
+    // the way so EVERY request exercises the store read
+    val srv = Pipeline.serveLinkApi(spark, out, port = 0, rateLimitMax = Int.MaxValue)
     try {
       val port = srv.boundPort
       val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
@@ -426,24 +425,46 @@ class LinkApiSpec extends SparkSpec {
     } finally { release.countDown(); srv.stop() }
   }
 
-  test("a transient failure without a stale-store signature retries within the request") {
-    // the swap-window flake class (r20): an exception whose text carries
-    // none of isStaleStore's markers — the bounded unknown-failure
-    // retry must rebind and succeed instead of surfacing a 500
+  test("a failure while the store generation moved is retried against the new one") {
     val calls = new java.util.concurrent.atomic.AtomicInteger(0)
-    val rebinds = new java.util.concurrent.atomic.AtomicInteger(0)
+    val gen = new java.util.concurrent.atomic.AtomicInteger(0)
+    // the first bind fails while a fold commits (the token moves);
+    // the retry binds the new generation and answers
     val flaky: String => LinkDb = { _ =>
-      if (calls.incrementAndGet() <= 2)
-        throw new RuntimeException("store hiccup with an unrecognizable message")
+      if (calls.incrementAndGet() == 1) {
+        gen.incrementAndGet()
+        throw new RuntimeException("read of a pruned generation")
+      }
       db
     }
     val srv = new LinkApiServer(flaky, port = 0,
-      onStale = () => { rebinds.incrementAndGet(); () }).start()
+      storeGeneration = () => gen.get.toString).start()
     try {
       val resp = post(srv.boundPort, """{"domain":"d3.com","limit":5}""")
       assert(resp.statusCode() == 200, resp.body())
-      assert(calls.get() == 3) // two failures, then the rebind succeeded
-      assert(rebinds.get() == 2) // each retry refreshed the binding
+      assert(calls.get() == 2, s"attempts=${calls.get()}")
+    } finally srv.stop()
+  }
+
+  test("a store that moves on every attempt is answered 504 at the budget, not a hot loop") {
+    val calls = new java.util.concurrent.atomic.AtomicInteger(0)
+    val gen = new java.util.concurrent.atomic.AtomicInteger(0)
+    val failing: String => LinkDb = { _ =>
+      calls.incrementAndGet()
+      throw new RuntimeException("read of a pruned generation")
+    }
+    val srv = new LinkApiServer(failing, port = 0, queryBudgetMs = 500,
+      storeGeneration = () => gen.incrementAndGet().toString).start()
+    try {
+      val t0 = System.nanoTime()
+      val resp = post(srv.boundPort, """{"domain":"d3.com","limit":5}""")
+      val elapsedMs = (System.nanoTime() - t0) / 1e6
+      assert(resp.statusCode() == 504, resp.body())
+      assert(resp.body().contains("ErrorTimeout"))
+      assert(elapsedMs < 10000, s"took ${elapsedMs}ms")
+      // the growing sleep between attempts (50, 75, 100, ... ms) caps
+      // a 500 ms budget at a handful of attempts
+      assert(calls.get() >= 2 && calls.get() <= 10, s"attempts=${calls.get()}")
     } finally srv.stop()
   }
 
@@ -460,28 +481,26 @@ class LinkApiSpec extends SparkSpec {
       val elapsedMs = (System.nanoTime() - t0) / 1e6
       assert(resp.statusCode() == 500, resp.body())
       assert(resp.body().contains("ErrorFailedLinks"))
-      // bounded attempts (1 + unknownAttempts), nowhere near the 61 s budget
-      assert(calls.get() == 4, s"attempts=${calls.get()}")
+      // the generation token did not move, so there is nothing to
+      // rebind to: one attempt, nowhere near the 61 s budget
+      assert(calls.get() == 1, s"attempts=${calls.get()}")
       assert(elapsedMs < 10000, s"took ${elapsedMs}ms")
     } finally srv.stop()
   }
 
   test("a deterministic analysis error is answered 500 on its first bind") {
     val calls = new java.util.concurrent.atomic.AtomicInteger(0)
-    val rebinds = new java.util.concurrent.atomic.AtomicInteger(0)
     val badPlan: String => LinkDb = { _ =>
       calls.incrementAndGet()
-      // no stale-store marker: the column does not exist in any generation
+      // the column does not exist in any generation
       new LinkDb(spark.range(1).toDF("id").select("no_such_column"))
     }
-    val srv = new LinkApiServer(badPlan, port = 0,
-      onStale = () => { rebinds.incrementAndGet(); () }).start()
+    val srv = new LinkApiServer(badPlan, port = 0).start()
     try {
       val resp = post(srv.boundPort, """{"domain":"d3.com","limit":5}""")
       assert(resp.statusCode() == 500, resp.body())
       assert(resp.body().contains("ErrorFailedLinks"))
       assert(calls.get() == 1, s"attempts=${calls.get()}")
-      assert(rebinds.get() == 0)
     } finally srv.stop()
   }
 
@@ -495,8 +514,8 @@ class LinkApiSpec extends SparkSpec {
     try {
       val resp = post(srv.boundPort, """{"domain":"d3.com","limit":5}""")
       assert(resp.statusCode() == 500, resp.body())
-      // missingRootAttempts = 2; the unknown-failure retry must not add more
-      assert(calls.get() == 2, s"attempts=${calls.get()}")
+      // a root that was never created cannot appear by rebinding
+      assert(calls.get() == 1, s"attempts=${calls.get()}")
     } finally srv.stop()
   }
 

@@ -1,6 +1,6 @@
 package graft
 
-import graft.api.{LinkApiServer, LinkDbRequest, PageDbRequest}
+import graft.api.{LinkDbRequest, PageDbRequest}
 import graft.sinks.{LinkStore, PageStore, StoreGen}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
@@ -144,13 +144,13 @@ class ServingReadSpec extends SparkSpec {
   }
 
   /** The failure a serving bind must raise when its generation is gone:
-    * one the server's retry classifies as a stale store (rebind), never
-    * a missing root or an empty answer.
+    * a [[StoreGen.StaleGeneration]], the type the server's retry rebinds
+    * on, never another error or an empty answer.
     */
   private def assertStale(what: String)(read: => Any): Unit = {
     val e = intercept[Exception](read)
-    assert(LinkApiServer.isStaleStore(e) && !LinkApiServer.isMissingRoot(e),
-      s"$what: ${LinkApiServer.causeChainText(e)}")
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[StoreGen.StaleGeneration]), s"$what: $e")
   }
 
   private def allReads(out: String): Seq[(String, () => Any)] = Seq(
@@ -179,6 +179,22 @@ class ServingReadSpec extends SparkSpec {
     }
     assert(LinkStore.readDomain(spark, s"$out/links", "ext2.co.uk").count() == 1)
     assert(Pipeline.hostRankOf(spark, out, "www.sitea.com").nonEmpty)
+  }
+
+  test("a pointer read between its rename and its checksum sidecar's fails as stale") {
+    val (out, _) = foldedStore("servingcrc")
+    val saved = Seq("links", "pages").map { s =>
+      val ptr = Paths.get(out, s, "_CURRENT")
+      val name = Files.readString(ptr)
+      // the local-FS commit instant after the pointer's rename and
+      // before its `.crc` sidecar's: new bytes under the old checksum
+      Files.writeString(ptr,
+        name.map(c => if (c.isDigit) ('0' + (c - '0' + 1) % 10).toChar else c))
+      (ptr, name)
+    }
+    for ((what, read) <- allReads(out)) assertStale(what)(read())
+    saved.foreach { case (ptr, name) => Files.writeString(ptr, name) }
+    assert(LinkStore.readDomain(spark, s"$out/links", "ext2.co.uk").count() == 1)
   }
 
   test("a pruned generation fails as stale, never as an empty answer") {

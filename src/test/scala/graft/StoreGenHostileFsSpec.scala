@@ -98,7 +98,7 @@ class StoreGenHostileFsSpec extends SparkSpec {
     // serving layer's retry loop re-resolves; it must NOT crash
     assert(StoreGen.resolve(spark, root) == root)
     // the swap completes (as the tail of commit would) and the next
-    // resolve — the serving retry's onStale() + re-read — heals
+    // resolve — the serving retry's rebind after the stale read — heals
     val out = f.create(ptr, true)
     try out.write(s"${gen.split('/').last}\n".getBytes("UTF-8")) finally out.close()
     assert(StoreGen.resolve(spark, root) == gen)
