@@ -17,13 +17,7 @@ object Bench {
     // the artifact alone (the fit leaves the timed ANN rows after first
     // touch at SFs where the fine level engages). Recorded before any
     // query runs — this run's own publish must not count.
-    val annIndexPreexisting = {
-      val parent = new java.io.File(
-        s"${BucketedTables.Root}/${BucketedTables.dirKey(sfDir)}")
-      Option(parent.listFiles()).getOrElse(Array.empty)
-        .exists(d => d.getName.startsWith("annindex-") &&
-          new java.io.File(d, "_GRAFT_DONE").isFile)
-    }
+    val annIndexPreexisting = AnnIndexStore.published(sfDir)
     // one trivial action first so JVM/codegen warm-up isn't billed to
     // whichever query happens to run first
     spark.range(1000).selectExpr("sum(id)").collect()

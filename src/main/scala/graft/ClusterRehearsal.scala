@@ -165,9 +165,9 @@ object ClusterRehearsal {
         "ann_cand_rows" -> cand)
     } finally {
       sim.dropFitMemosForTest(dir)
-      BucketedTables.deleteRecursively(new java.io.File(
+      SealedDir.deleteRecursively(java.nio.file.Paths.get(
         s"${BucketedTables.Root}/${BucketedTables.dirKey(dir)}"))
-      BucketedTables.deleteRecursively(new java.io.File(dir))
+      SealedDir.deleteRecursively(java.nio.file.Paths.get(dir))
     }
   }
 

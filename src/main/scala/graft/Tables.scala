@@ -181,7 +181,7 @@ object Tables {
     if (java.nio.file.Files.exists(target))
       java.nio.file.Files.move(target, old)
     java.nio.file.Files.move(java.nio.file.Paths.get(tmp), target)
-    deleteRecursively(old)
+    SealedDir.deleteRecursively(old)
   }
 
   /** Read a just-dumped directory back with the WRITTEN frame's own
@@ -192,13 +192,6 @@ object Tables {
     */
   def readBack(df: DataFrame, path: String): DataFrame =
     df.sparkSession.read.schema(df.schema).parquet(path)
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverseIterator
-        .foreach(java.nio.file.Files.delete)
-    }
 
   /** Planting convention shared by every injected-duplicate fixture
     * (and by the Bench recall probe, which re-derives the planted

@@ -529,7 +529,7 @@ object SimilarityOps {
     new java.util.concurrent.ConcurrentHashMap[String, IvfIndex]()
 
   /** Every constant that shapes the fitted artifact — part of the
-    * `_ANN_INDEX` fingerprint, so ANY fit-recipe change (including a
+    * `_ANN_INDEX` key, so ANY fit-recipe change (including a
     * sys-prop kc-cap override) keys a fresh artifact instead of
     * silently loading one fit under the old recipe.
     */
@@ -549,21 +549,17 @@ object SimilarityOps {
       // artifact loads in ~a second where the fine fit + calibration
       // is an O(corpus) job (37-65 s at sf100) — the fit happens at
       // ingest (first touch), every later session reads the store
-      val fp = AnnIndexStore.fpFor(dir, annRecipe)
-      AnnIndexStore.load(s, dir, fp) match {
-        case Some(art) =>
-          pqFitCache.putIfAbsent(dir, art.pq): Unit
-          art.idx
-        case None =>
-          val coarse =
-            ivfFitCache.computeIfAbsent((dir, k), _ => fitIvfK(embSampleFor(s, dir), k))
-          val e = Tables.embeddings(s, dir)
-          val fine0 = fitFineLevelFrame(s, e, coarse)
-          val den = calibrateProbeDen(s, e, coarse.copy(fine = Some(fine0)))
-          val fitted = coarse.copy(fine = Some(fine0.copy(probeDen = den)))
-          AnnIndexStore.publish(s, dir, fp, fitted, pqFitFor(s, dir))
-          fitted
+      val art = AnnIndexStore.loadOrFit(s, dir, annRecipe) {
+        val coarse =
+          ivfFitCache.computeIfAbsent((dir, k), _ => fitIvfK(embSampleFor(s, dir), k))
+        val e = Tables.embeddings(s, dir)
+        val fine0 = fitFineLevelFrame(s, e, coarse)
+        val den = calibrateProbeDen(s, e, coarse.copy(fine = Some(fine0)))
+        AnnIndexStore.Artifact(coarse.copy(fine = Some(fine0.copy(probeDen = den))),
+          pqFitFor(s, dir))
       }
+      pqFitCache.putIfAbsent(dir, art.pq): Unit
+      art.idx
     })
   }
 

@@ -219,7 +219,7 @@ object StreamingBatchOps {
     * parquet sfDir, so the watched manifest + WAT segments come from
     * the deterministic [[graft.sources.ManifestFixture]] (q59's
     * pattern), the stream drains it ONCE per JVM temp dir
-    * (AvailableNow, `_OK`-cached), and the query reads the ingested
+    * (AvailableNow, cached as a sealed dir), and the query reads the ingested
     * per-segment stores back marker-gated. The post-ingest per-segment
     * link rows dump dir-keyed and BOTH engines roll them up (q59_verify
     * pattern) — so segment isolation (no cross-segment bleed: each

@@ -2,6 +2,7 @@ package graft.sources
 
 import java.io.FileOutputStream
 import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
 import java.util.zip.GZIPOutputStream
 
 /** Deterministic segment-manifest fixture for the s09 streaming
@@ -10,9 +11,9 @@ import java.util.zip.GZIPOutputStream
   * (the WarcFixture pattern): a Common Crawl-layout tree of
   * `segments/<id>/part.wat.gz` WAT files plus a `manifest/` directory
   * holding the wat.paths fragment the stream watches, materialized
-  * once under the JVM temp dir with the same atomic-move `_OK`
-  * protocol as [[WarcFixture]] (Verify and Bench may race from
-  * separate JVMs).
+  * once under the JVM temp dir as a [[graft.SealedDir]] keyed by a
+  * digest of the WAT text (Verify and Bench may race from separate
+  * JVMs; the second waits for the first one's sealed build).
   *
   * Segment ids follow the reference's `<crawl>.<ordinal>` shape
   * (wat.go:209), so ordinal-based selection works on them too. Each
@@ -59,145 +60,79 @@ object ManifestFixture {
   }
 
   /** Parameterized sibling of [[dir]] for scale/cluster rehearsals:
-    * same Common Crawl layout, its own param-keyed cache dir, and the
+    * same Common Crawl layout, its own param-named fixture dir, and the
     * manifest additionally SPLIT into `fragments/frag<i>.paths` files
     * so a rehearsal can land fragments progressively into a watched
     * directory (the crawler-publishes-while-importer-runs shape).
     * `manifest/wat.paths` still carries the full list for batch-parity
     * imports.
     */
-  def scaledDir(segments: Int, pages: Int, links: Int, fragments: Int): String = synchronized {
+  def scaledDir(segments: Int, pages: Int, links: Int, fragments: Int): String = {
     require(fragments >= 1 && fragments <= segments,
       s"fragments must be in [1, $segments], got $fragments")
-    val tmpRoot = java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
-    val base = tmpRoot.resolve(
-      s"graft-manifest-fixture-s$segments-p$pages-l$links-f$fragments-v$IngestProtocolVersion")
-    val ok = base.resolve("_OK")
-    if (java.nio.file.Files.exists(ok)) return base.toAbsolutePath.toString
-    val build = java.nio.file.Files.createTempDirectory(tmpRoot, "graft-manifest-scaled")
-    val paths = (0 until segments).map { seg =>
-      val segDir = build.resolve(s"segments/1687.$seg")
-      java.nio.file.Files.createDirectories(segDir)
-      val f = segDir.resolve("part.wat.gz")
-      val g = new GZIPOutputStream(new FileOutputStream(f.toFile))
-      try g.write(segmentWat(seg, pages, links).getBytes(UTF_8)) finally g.close()
-      base.resolve(s"segments/1687.$seg/part.wat.gz").toAbsolutePath.toString
+    val wats = (0 until segments).map(segmentWat(_, pages, links))
+    materialize(s"graft-manifest-scaled-s$segments-p$pages-l$links-f$fragments",
+      "# graft scaled fixture manifest\n", wats) { (build, paths) =>
+      Files.createDirectories(Paths.get(build, "fragments"))
+      paths.grouped(math.max(1, math.ceil(segments.toDouble / fragments).toInt))
+        .zipWithIndex.foreach { case (slice, i) =>
+          Files.writeString(Paths.get(build, f"fragments/frag$i%02d.paths"),
+            slice.mkString("", "\n", "\n"))
+        }
     }
-    java.nio.file.Files.createDirectories(build.resolve("manifest"))
-    java.nio.file.Files.writeString(build.resolve("manifest/wat.paths"),
-      paths.mkString("# graft scaled fixture manifest\n", "\n", "\n"))
-    java.nio.file.Files.createDirectories(build.resolve("fragments"))
-    paths.grouped(math.max(1, math.ceil(segments.toDouble / fragments).toInt))
-      .zipWithIndex.foreach { case (slice, i) =>
-        java.nio.file.Files.writeString(
-          build.resolve(f"fragments/frag$i%02d.paths"),
-          slice.mkString("", "\n", "\n"))
-      }
-    java.nio.file.Files.createFile(build.resolve("_OK"))
-    val moved =
-      try {
-        java.nio.file.Files.move(build, base,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        true
-      } catch { case _: java.io.IOException => false }
-    if (moved) base.toAbsolutePath.toString
-    else if (java.nio.file.Files.exists(ok)) base.toAbsolutePath.toString
-    else throw new IllegalStateException(
-      s"scaled fixture build race left no usable dir at $base")
   }
 
   /** Materialize (once) and return the fixture root: `segments/…`
     * WAT files + `manifest/wat.paths` with absolute paths.
     */
-  def dir(): String = synchronized {
-    val tmpRoot = java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
-    val base = tmpRoot.resolve("graft-manifest-fixture-v2")
-    val ok = base.resolve("_OK")
-    if (java.nio.file.Files.exists(ok)) return base.toAbsolutePath.toString
-    val build = java.nio.file.Files.createTempDirectory(tmpRoot, "graft-manifest-build")
-    val paths = (0 until Segments).map { seg =>
-      val segDir = build.resolve(s"segments/1687.$seg")
-      java.nio.file.Files.createDirectories(segDir)
-      val f = segDir.resolve("part.wat.gz")
-      val g = new GZIPOutputStream(new FileOutputStream(f.toFile))
-      try g.write(segmentWat(seg).getBytes(UTF_8)) finally g.close()
-      // the manifest records the CANONICAL location (post-move), so
-      // fragments stay valid after the atomic rename
-      base.resolve(s"segments/1687.$seg/part.wat.gz").toAbsolutePath.toString
-    }
-    java.nio.file.Files.createDirectories(build.resolve("manifest"))
-    java.nio.file.Files.writeString(build.resolve("manifest/wat.paths"),
-      paths.mkString("# graft fixture manifest\n", "\n", "\n"))
-    java.nio.file.Files.createFile(build.resolve("_OK"))
-    val moved =
-      try {
-        java.nio.file.Files.move(build, base,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        true
-      } catch { case _: java.io.IOException => false }
-    if (moved) base.toAbsolutePath.toString
-    else if (java.nio.file.Files.exists(ok)) { // racer completed first
-      deleteRecursively(build)
-      base.toAbsolutePath.toString
-    } else {
-      // private complete build: the manifest was written with the
-      // canonical post-move paths — retarget it at this build's own
-      // files so the fixture stays self-consistent
-      java.nio.file.Files.writeString(build.resolve("manifest/wat.paths"),
-        (0 until Segments)
-          .map(seg => build.resolve(s"segments/1687.$seg/part.wat.gz").toAbsolutePath.toString)
-          .mkString("# graft fixture manifest\n", "\n", "\n"))
-      build.toAbsolutePath.toString
+  def dir(): String =
+    materialize("graft-manifest-fixture", "# graft fixture manifest\n",
+      (0 until Segments).map(segmentWat(_))) { (_, _) => }
+
+  /** The fixture tree for `wats` (one WAT text per segment) as a sealed
+    * dir named `name`: the manifest lists each segment's path under the
+    * FINAL directory, which the seal's rename makes valid; `extra` adds
+    * files to the build dir given (build dir, segment paths).
+    */
+  private def materialize(name: String, header: String, wats: Seq[String])(
+      extra: (String, Seq[String]) => Unit): String = {
+    val parent = sys.props("java.io.tmpdir")
+    val key = graft.SealedDir.digest(wats: _*)
+    val base = graft.SealedDir.pathOf(parent, name, key)
+    graft.SealedDir.getOrBuild(parent, name, key) { build =>
+      val paths = wats.zipWithIndex.map { case (wat, seg) =>
+        val segDir = Paths.get(build, s"segments/1687.$seg")
+        Files.createDirectories(segDir)
+        val g = new GZIPOutputStream(new FileOutputStream(segDir.resolve("part.wat.gz").toFile))
+        try g.write(wat.getBytes(UTF_8)) finally g.close()
+        s"$base/segments/1687.$seg/part.wat.gz"
+      }
+      Files.createDirectories(Paths.get(build, "manifest"))
+      Files.writeString(Paths.get(build, "manifest/wat.paths"),
+        paths.mkString(header, "\n", "\n"))
+      extra(build, paths)
     }
   }
 
   /** The STREAM-INGESTED store for s09: run the manifest-watching
     * import once (AvailableNow drain of the fixture's manifest dir)
-    * and cache the resulting store under an `_OK`-marked directory —
-    * bench trials and the Verify pass re-read it instead of
-    * re-importing. Same atomic-move discipline as [[dir]].
+    * into a [[graft.SealedDir]] — bench trials and the Verify pass
+    * re-read it instead of re-importing. The key covers the fixture
+    * dir (itself keyed by its content) and [[IngestProtocolVersion]].
     */
-  def ingestedStore(spark: org.apache.spark.sql.SparkSession): String = synchronized {
-    val tmpRoot = java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
-    // cache key derives from the fixture parameters + an explicit
-    // ingest-protocol version, so a parameter or protocol change
-    // structurally invalidates the cached store — a fixed name would
-    // silently serve a stale store to s09 and its oracle dump after
-    // any change that forgets to bump it by hand
-    val base = tmpRoot.resolve(
-      s"graft-manifest-ingest-p$IngestProtocolVersion" +
-        s"-s$Segments-p$PagesPerSegment-l$LinksPerPage-d$ExtDomains")
-    val ok = base.resolve("_OK")
-    if (java.nio.file.Files.exists(ok)) return s"${base.toAbsolutePath}/store"
+  def ingestedStore(spark: org.apache.spark.sql.SparkSession): String = {
     val fixture = dir()
-    val build = java.nio.file.Files.createTempDirectory(tmpRoot, "graft-ingest-build")
-    val q = graft.streaming.SegmentIngest.start(spark,
-      s"$fixture/manifest",
-      s"$build/store",
-      s"$build/checkpoint",
-      availableNow = true)
-    q.awaitTermination()
-    require(SegmentManifest.completedSegments(spark, s"$build/store").size == Segments,
-      s"stream ingest incomplete under $build/store")
-    java.nio.file.Files.createFile(build.resolve("_OK"))
-    val moved =
-      try {
-        java.nio.file.Files.move(build, base,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        true
-      } catch { case _: java.io.IOException => false }
-    val root =
-      if (moved) base
-      else if (java.nio.file.Files.exists(ok)) { deleteRecursively(build); base }
-      else build
-    s"${root.toAbsolutePath}/store"
-  }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(p)) {
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
+    val root = graft.SealedDir.getOrBuild(sys.props("java.io.tmpdir"),
+        "graft-manifest-ingest", graft.SealedDir.digest(fixture, IngestProtocolVersion)) { build =>
+      val q = graft.streaming.SegmentIngest.start(spark,
+        s"$fixture/manifest",
+        s"$build/store",
+        s"$build/checkpoint",
+        availableNow = true)
+      q.awaitTermination()
+      require(SegmentManifest.completedSegments(spark, s"$build/store").size == Segments,
+        s"stream ingest incomplete under $build/store")
     }
+    s"$root/store"
   }
 }

@@ -2,50 +2,29 @@ package graft.sources
 
 import org.apache.spark.sql.SparkSession
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-
 /** A published ranked link store derived from one sf dir's links —
   * the on-disk input q69_host_rank_serve needs (the driver can only
   * hand queries a parquet `sfDir`, but rank SERVING reads a store
   * artifact, so the store itself must exist as a fixture).
   *
-  * Built once per sfDir via [[graft.Pipeline.publishRankedStore]] —
-  * the REAL production path (lease, generation dir, `_RANKS` bucketed
-  * by host) — then cached under a content-keyed name with the same
-  * atomic-move/cross-process discipline as [[WarcFixture.dir]]: the
-  * build lands in a private temp dir and renames into place, a lost
-  * race keeps the private complete copy, and debris is never swept in
-  * place. The store layout is relocatable (the `_CURRENT` pointer
-  * stores a relative generation name), so the post-build move is
-  * safe.
+  * Built once via [[graft.Pipeline.publishRankedStore]] — the REAL
+  * production path (lease, generation dir, `_RANKS` bucketed by host)
+  * — into a [[graft.SealedDir]] next to the sf dir's bucketed layouts,
+  * keyed by [[graft.SealedDir.keyOf]] over the `Tables.links` frame:
+  * a regenerated sf dir or an edited links recipe keys a new store
+  * instead of serving the old one. The store layout is relocatable
+  * (the `_CURRENT` pointer stores a relative generation name), so the
+  * seal's rename into place is safe.
   */
 object RankedStoreFixture {
 
-  def dir(spark: SparkSession, sfDir: String): String = synchronized {
-    val tmpRoot = Paths.get(sys.props("java.io.tmpdir"))
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(sfDir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    val base = tmpRoot.resolve(s"graft-rankstore-v1-$key")
-    val ok = base.resolve("_OK")
-    if (Files.exists(ok)) return base.resolve("store").toString
-    val build = Files.createTempDirectory(tmpRoot, "graft-rankstore-build")
-    graft.Pipeline.publishRankedStore(spark,
-      graft.Tables.links(spark, sfDir), build.resolve("store").toString)
-    Files.createFile(build.resolve("_OK"))
-    val moved =
-      try {
-        Files.move(build, base, StandardCopyOption.ATOMIC_MOVE); true
-      } catch { case _: java.io.IOException => false }
-    if (moved) base.resolve("store").toString
-    else if (Files.exists(ok)) { // racer completed first: use theirs
-      deleteRecursively(build)
-      base.resolve("store").toString
-    } else build.resolve("store").toString // debris holds the name: private copy
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p, java.nio.file.LinkOption.NOFOLLOW_LINKS))
-      Files.list(p).forEach(deleteRecursively(_))
-    Files.deleteIfExists(p)
+  def dir(spark: SparkSession, sfDir: String): String = {
+    lazy val links = graft.Tables.links(spark, sfDir)
+    val root = graft.SealedDir.getOrBuild(
+        s"${graft.BucketedTables.Root}/${graft.BucketedTables.dirKey(sfDir)}", "rankstore",
+        graft.SealedDir.keyOf(sfDir, "rankstore", links)) { build =>
+      graft.Pipeline.publishRankedStore(spark, links, s"$build/store")
+    }
+    s"$root/store"
   }
 }

@@ -6,11 +6,11 @@ import java.util.zip.GZIPOutputStream
 
 /** Deterministic on-disk WARC fixture for the q59 ingestion query —
   * the driver's correctness/bench harness passes only a parquet
-  * `sfDir`, so the raw-WARC chain gets its input from here: a fixed,
-  * content-addressed set of `.warc.gz` files materialized once under
-  * the JVM temp dir (rebuilt from scratch if a previous build died
-  * before its `_OK` marker landed; `_*` names are invisible to
-  * Hadoop's input listing, so the marker never reaches the parser).
+  * `sfDir`, so the raw-WARC chain gets its input from here: a fixed
+  * set of `.warc.gz` files materialized once under the JVM temp dir as
+  * a [[graft.SealedDir]] keyed by a digest of the records themselves
+  * (`_*` names are invisible to Hadoop's input listing, so the seal
+  * never reaches the parser).
   *
   * Shape mirrors the Common Crawl layout WarcSource targets
   * (reference: pkg/commoncrawl/wat.go reads the WAT sidecars of
@@ -96,40 +96,16 @@ object WarcFixture {
     out.toByteArray
   }
 
-  /** Materialize (once) and return the fixture directory. The build
-    * lands in a private temp dir first and moves into place atomically
-    * — `synchronized` only guards within one JVM, and the driver may
-    * run Verify and Bench as separate processes against the same
-    * tmpdir. On ANY interference (the atomic move loses and the
-    * canonical name is not a completed fixture) the caller gets its
-    * own private, complete build — never a sweep of the shared name:
-    * deleting debris in place would race another process's completed
-    * move (the check-then-sweep window), and the fixture is
-    * content-deterministic, so any complete directory is equivalent.
-    */
-  def dir(): String = synchronized {
-    val tmpRoot = java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
-    val base = tmpRoot.resolve("graft-warc-fixture-v1")
-    val ok = base.resolve("_OK")
-    if (java.nio.file.Files.exists(ok)) return base.toAbsolutePath.toString
-    val build = java.nio.file.Files.createTempDirectory(tmpRoot, "graft-warc-build")
-    (0 until Files).foreach { f =>
-      val recs = chaff(f) ++ (0 until PagesPerFile).map(page(f, _))
-      val s = new FileOutputStream(build.resolve(f"crawl-$f%05d.warc.gz").toFile)
-      try s.write(gzMembers(recs)) finally s.close()
+  /** Materialize (once) and return the fixture directory. */
+  def dir(): String = {
+    val files = (0 until Files).map(f =>
+      f"crawl-$f%05d.warc.gz" -> (chaff(f) ++ (0 until PagesPerFile).map(page(f, _))))
+    val key = graft.SealedDir.digest(files.flatMap { case (n, recs) => n +: recs }: _*)
+    graft.SealedDir.getOrBuild(sys.props("java.io.tmpdir"), "graft-warc-fixture", key) { build =>
+      files.foreach { case (name, recs) =>
+        val s = new FileOutputStream(s"$build/$name")
+        try s.write(gzMembers(recs)) finally s.close()
+      }
     }
-    java.nio.file.Files.createFile(build.resolve("_OK"))
-    val moved =
-      try {
-        java.nio.file.Files.move(build, base,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        true
-      } catch { case _: java.io.IOException => false }
-    if (moved) base.toAbsolutePath.toString
-    else if (java.nio.file.Files.exists(ok)) { // racer completed first: use theirs
-      Option(build.toFile.listFiles()).foreach(_.foreach(_.delete()))
-      java.nio.file.Files.deleteIfExists(build)
-      base.toAbsolutePath.toString
-    } else build.toAbsolutePath.toString // debris holds the name: private copy
   }
 }
