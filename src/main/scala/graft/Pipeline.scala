@@ -321,16 +321,17 @@ object Pipeline {
     else None
   }
 
-  /** SERVING read of the live ranks: only the requested hosts'
-    * `rank_bucket=` directories of `_RANKS` are listed and scanned
-    * ([[graft.sinks.StoreGen.readPartitions]]), so a rank lookup
-    * against a crawl-scale artifact touches ≤ hosts.size of
+  /** SERVING read of the live ranks as a frame: only the requested
+    * hosts' `rank_bucket=` directories of `_RANKS` are listed and
+    * scanned ([[graft.sinks.StoreGen.readPartitions]]), so a rank
+    * lookup against a crawl-scale artifact touches ≤ hosts.size of
     * [[graft.sinks.LinkStore.NumBuckets]] partitions instead of the
     * full host table. Building the frame runs no Spark job once the
     * generation's `_RANKS` schema is memoized (its first bind infers
     * it: a listing job over every bucket plus a footer job); a whole
     * `_RANKS` read paid both on every call. Empty frame when no ranks
-    * artifact is published.
+    * artifact is published. For q69 and other many-host reads; one
+    * host's serving lookup is [[hostRankOf]].
     */
   def hostRanksFor(spark: SparkSession, outDir: String,
       hosts: Seq[String]): DataFrame = {
@@ -347,11 +348,20 @@ object Pipeline {
     }
   }
 
-  /** One host's live rank via the pruned [[hostRanksFor]] read. */
+  /** One host's live rank, read in the calling thread from the host's
+    * one `rank_bucket=` directory of the live `_RANKS`
+    * ([[graft.sinks.StoreGen.listPartitions]], then
+    * [[api.ServingRows.direct]]): no Spark job once the generation's
+    * `_RANKS` schema is memoized. None when the host has no rank or no
+    * ranks artifact is published.
+    */
   def hostRankOf(spark: SparkSession, outDir: String,
       host: String): Option[Double] =
-    hostRanksFor(spark, outDir, Seq(host)).collect()
-      .headOption.map(_.getDouble(1))
+    graft.sinks.StoreGen.listPartitions(spark, s"$outDir/links", RanksArtifact,
+        "rank_bucket", Seq(LinkStore.bucketOfDomain(host)))
+      .flatMap(r => api.ServingRows.direct(spark, r)
+        .window(col("host") === host, Nil, 0, 1).headOption)
+      .map(_.getAs[Double]("rank"))
 
   /** `_RANKS` layout: parquet partitioned by `rank_bucket` =
     * xxhash64(host) mod NumBuckets — the same bucketing the link store
@@ -620,52 +630,61 @@ object Pipeline {
       tmp => LinkStore.write(LinkCompaction.compact(all), tmp))
   }
 
-  /** Query surface over an imported store — the LinkDB API bound to a
-    * domain-pruned read. The store keys `link_domain` by eTLD+1, so the
-    * pruning predicate uses the request's registrable domain; the
-    * subdomain part of the request is applied by LinkDb.query itself.
+  /** Query surface over an imported store — the LinkDB API bound to the
+    * live generation's one bucket directory of the domain, listed now
+    * and read by each query in the calling thread, with no Spark job
+    * (`LinkStore.domainBucket`, [[api.ServingRows.direct]]). The store
+    * keys `link_domain` by eTLD+1, so the bind uses the request's
+    * registrable domain; the subdomain part of the request is applied
+    * by LinkDb.query itself. The first bind of a generation infers and
+    * memoizes its schema (Spark jobs); later binds only list.
     */
   def linkDb(spark: SparkSession, outDir: String, domain: String): api.LinkDb = {
     val (etld1, _) = graft.functions.UrlFns.splitDomain(domain)
-    new api.LinkDb(LinkStore.readDomain(spark, s"$outDir/links", etld1))
+    val (bucket, pred) = LinkStore.domainBucket(spark, s"$outDir/links", etld1)
+    new api.LinkDb(api.ServingRows.direct(spark, bucket, pred))
   }
 
   /** Full store scan (for analytics over all domains). */
   def links(spark: SparkSession, outDir: String): DataFrame =
     LinkStore.read(spark, s"$outDir/links")
 
-  /** Page-record lookup surface over an imported store, bound to a
-    * partition-pruned eTLD+1 read (the page-side sibling of [[linkDb]]
-    * — title/IP/crawl-date/robots lookups from the page records the
-    * import already persists).
+  /** Page-record lookup surface over an imported store, bound like
+    * [[linkDb]] to the eTLD+1's one page-store bucket directory and
+    * read by each query in the calling thread, with no Spark job (the
+    * page-side sibling of [[linkDb]] — title/IP/crawl-date/robots
+    * lookups from the page records the import already persists).
     */
   def pageDb(spark: SparkSession, outDir: String, host: String): api.PageDb = {
     val (etld1, _) = graft.functions.UrlFns.splitDomain(host)
-    new api.PageDb(graft.sinks.PageStore.readDomain(spark, s"$outDir/pages", etld1))
+    val (bucket, pred) = graft.sinks.PageStore.domainBucket(spark, s"$outDir/pages", etld1)
+    new api.PageDb(api.ServingRows.direct(spark, bucket, pred))
   }
 
   /** Serve the store over HTTP — the reference's `cmd/linksapi`
     * (POST /api/links with CORS + rate limiting). Each request binds a
-    * FRESH read of the live generation's one bucket directory
-    * (StoreGen.readPartitions), so the per-request scan is
-    * 1/NumBuckets of the store plus row-group pruning, and a store
-    * rewrite (compactStream/foldSegments) is picked up by the very next
-    * request. What carries across requests is metadata only: the
-    * schema of each store's live generation, memoized per generation
-    * directory. That is safe because a committed generation is never
-    * written again and the memo is replaced when `_CURRENT` moves.
-    * DataFrames are not kept: one bound to a generation would read
-    * files that the second fold after it prunes. So after the first
-    * request of a generation, a bind runs no Spark job and each route
-    * runs only its query's job. `port = 0` picks an ephemeral port.
+    * FRESH listing of the live generation's one bucket directory
+    * ([[linkDb]], [[pageDb]], [[hostRankOf]]) and answers from its
+    * parquet files in the server's own thread: the per-request read is
+    * 1/NumBuckets of the store plus row-group pruning, no request runs
+    * a Spark job, and a store rewrite (compactStream/foldSegments) is
+    * picked up by the very next request. What carries across requests
+    * is metadata only: the schema of each store's live generation,
+    * memoized per generation directory. That is safe because a
+    * committed generation is never written again and the memo is
+    * replaced when `_CURRENT` moves. Listings are not kept: one bound
+    * to a generation would name files that the second fold after it
+    * prunes. `port = 0` picks an ephemeral port.
     *
     * The server's generation token is the pair of `_CURRENT` targets of
     * links and pages (`_RANKS` rides in the links generation). A failed
     * request is retried only when that pair moved during the attempt or
     * the read met a `StoreGen.StaleGeneration`; anything else is a 500
     * on the first attempt. No listing cache needs refreshing before a
-    * retry: every serving read names explicit `_gen-N` paths, and a
-    * committed generation is never rewritten.
+    * retry: each attempt lists afresh. A generational store's reads name
+    * explicit `_gen-N` paths, which are never rewritten; a plain store
+    * before its first fold names the root itself, whose files that fold
+    * prunes, and only the moved token says so.
     */
   def serveLinkApi(spark: SparkSession, outDir: String, port: Int = 8010,
       rateLimitMax: Int = 50): api.LinkApiServer =

@@ -40,12 +40,31 @@ object PlanAudit {
     sb.append("`HashAggregate` partial/final pairs, top-k as `TakeOrderedAndProject`.\n\n")
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       val plan =
-        try fn(spark, sfDir).queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
+        try stableIds(fn(spark, sfDir).queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode))
         catch { case e: Throwable => s"PLAN FAILED: ${e.getMessage}" }
       sb.append(s"## $name\n\n```\n$plan\n```\n\n")
     }
     Files.writeString(Paths.get(out), sb.toString)
     println(s"wrote $out")
+  }
+
+  /** `plan` without what differs between two runs of the same code:
+    * expression ids (`#N`) and exchange ids (`plan_id=N`) renumbered
+    * 1, 2, … in order of first appearance, and the identity hashes of
+    * arrays and lambdas printed as arguments dropped. The ids count per
+    * JVM and the hashes are per object, so they shift with everything
+    * run before: without this every run rewrites nearly every line of
+    * the file, and a real plan change drowns.
+    */
+  private[graft] def stableIds(plan: String): String = {
+    val renumbered = Seq("#", "plan_id=").foldLeft(plan) { (text, prefix) =>
+      val ids = scala.collection.mutable.HashMap.empty[String, Int]
+      s"${java.util.regex.Pattern.quote(prefix)}(\\d+)".r.replaceAllIn(text,
+        m => prefix + ids.getOrElseUpdate(m.group(1), ids.size + 1))
+    }
+    renumbered
+      .replaceAll("\\$Lambda\\$\\d+/0x[0-9a-f]+@[0-9a-f]+", "\\$Lambda")
+      .replaceAll("(\\[[A-Z]|\\[L[\\w.$]+;)@[0-9a-f]+", "$1@")
   }
 }

@@ -17,10 +17,9 @@ import java.nio.charset.StandardCharsets
   * (and Spark's bundled json4s) so the library adds no dependencies.
   *
   * `resolve` maps the (already host-normalized) request domain to the
-  * LinkDb serving it — Pipeline.serveLinkApi binds it to a
-  * partition-pruned store read, so each request scans only the
-  * requested domain's bucket; the collect stays the bounded ≤300-row
-  * serving window of LinkDb.query.
+  * LinkDb serving it — Pipeline.serveLinkApi binds it to the requested
+  * domain's one store bucket, read in the request's own thread; the
+  * answer stays the bounded ≤300-row serving window of LinkDb.query.
   *
   * `storeGeneration` names the store generation the routes read
   * (Pipeline.serveLinkApi: the `_CURRENT` targets of links and pages).
@@ -52,15 +51,16 @@ final class LinkApiServer(
     // beyond the reference's surface: when set, POST /api/ranks serves
     // the store-maintained PageRank of one host (Pipeline.hostRankOf —
     // a read of the host's one rank_bucket directory of the live
-    // generation's _RANKS; with the generation's schema memoized, the
-    // lookup's collect is its only Spark job)
+    // generation's _RANKS in the calling thread; with the generation's
+    // schema memoized, the lookup runs no Spark job)
     rankOf: Option[String => Option[Double]] = None,
     // beyond the reference's surface: when set, POST /api/pages serves
-    // the page records of one host (Pipeline.pageDb — a fresh read of
-    // the eTLD+1's page-store bucket directory per request, same
-    // bind-late posture as /api/links; the bind reuses the memoized
-    // schema of the live generation, safe because a committed
-    // generation is never rewritten, and runs no Spark job)
+    // the page records of one host (Pipeline.pageDb — a fresh listing
+    // of the eTLD+1's page-store bucket directory per request, same
+    // bind-late posture as /api/links, read in the calling thread; the
+    // bind reuses the memoized schema of the live generation, safe
+    // because a committed generation is never rewritten, and neither
+    // bind nor query runs a Spark job)
     pageDbOf: Option[String => PageDb] = None,
     // per-request time budget on store reads — the reference caps
     // every DB query at 61 s (controller.go:95-104 SetMaxTime +
@@ -95,6 +95,7 @@ final class LinkApiServer(
 
   private val lastSweep = new java.util.concurrent.atomic.AtomicLong(Long.MinValue / 2)
 
+  LinkApiServer.noDelayUnlessSet()
   private val server = HttpServer.create(new InetSocketAddress(port), 0)
   server.createContext("/api/links", (ex: HttpExchange) =>
     safely(ex, "HandlerGetDomainLinks", "ErrorFailedLinks", "Error getting links")(handleLinks))
@@ -307,10 +308,10 @@ final class LinkApiServer(
               case JLong(n) => n.toInt
               case _ => dflt
             }
-            // rlike compiles these user patterns inside the Spark job
+            // rlike compiles these user patterns while the query runs
             // (PageDb.anyMatch wraps them as "(?i)pattern") — validate
             // up front so a malformed regex is a 400 request error,
-            // not a 500 from the failed job
+            // not a 500 from the failed query
             val badPattern = Seq(str(j \ "path"), str(j \ "title")).flatten.find { p =>
               try { java.util.regex.Pattern.compile(s"(?i)$p"); false }
               catch { case _: Exception => true }
@@ -336,7 +337,7 @@ final class LinkApiServer(
     * The deadline wraps the WHOLE retry loop (budget per request, not
     * per attempt — the reference's posture: one 61 s clock started at
     * query submission, controller.go:95-98). The interrupt lands in
-    * [[retryWhileMoved]]'s sleep or the Spark action's await; a read that
+    * [[retryWhileMoved]]'s sleep or a Spark action's await; a read that
     * ignores it leaks a pool thread only until the underlying scan
     * finishes, and the HTTP worker is freed immediately either way.
     */
@@ -508,6 +509,20 @@ final class LinkApiServer(
 }
 
 object LinkApiServer {
+  /** Turns on TCP_NODELAY for the JDK server's sockets unless the user
+    * set `sun.net.httpserver.nodelay` either way. The JDK default leaves
+    * Nagle's algorithm on, and the server writes a response's headers
+    * and its body as two segments: the body waits until the client
+    * ACKs the headers, which a client with delayed ACKs holds for up to
+    * 40 ms. That stall was about 44 ms of every request, more than the
+    * request's own work. The JDK reads the property once, in
+    * `sun.net.httpserver.ServerConfig`'s static initializer, so it must
+    * be set before the JVM's first `HttpServer.create`.
+    */
+  private def noDelayUnlessSet(): Unit =
+    if (System.getProperty("sun.net.httpserver.nodelay") == null)
+      System.setProperty("sun.net.httpserver.nodelay", "true")
+
   /** A `StoreGen.StaleGeneration` anywhere in `e`'s cause chain. */
   private def staleGeneration(e: Throwable): Boolean =
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(10)

@@ -33,24 +33,35 @@ final case class LinkOut(
     noFollow: Int, noIndex: Int, dateFrom: String, dateTo: String,
     ips: Seq[String], qty: Long)
 
-/** The LinkDB query API over a compacted-links DataFrame
-  * (LinkCompaction output / LinkStore.read) — the drop-in for the
-  * reference's ControllerGetDomainLinks (controller.go:22-129).
+/** The LinkDB query API — the drop-in for the reference's
+  * ControllerGetDomainLinks (controller.go:22-129). [[query]] defines a
+  * request once: its filter and sort Columns, the window, the rendering
+  * of a row and the adjacent-duplicate merge. Where the rows come from
+  * is the only thing that differs between the two ways to build one:
+  *   - `new LinkDb(links)` over any compacted-links DataFrame
+  *     (LinkCompaction output / LinkStore.read) runs the window as a
+  *     Spark plan: the domain predicate pushes into the scan, and
+  *     prunes partitions when the source is a LinkStore read. For
+  *     analytics and fixed frames.
+  *   - `Pipeline.linkDb` (what the server binds) reads the domain's one
+  *     bucket directory of the live store generation in the calling
+  *     thread and evaluates the same Columns there ([[ServingRows]]):
+  *     no Spark job.
   *
-  * Spark-first shape: filters and sort are Column expressions, so the
-  * domain predicate pushes into the scan (and prunes partitions when
-  * the source is a LinkStore); sort+offset+limit bound the fetched
-  * window exactly like the reference's cursor (`limit*3` rows from
-  * `skip=(page-1)*limit`). Only that ≤300-row window is collected — the
-  * adjacent-duplicate merge (cleanDomainLinks, controller.go:199-254)
-  * is then a sequential fold over the page, as in the reference.
+  * Either way sort+offset+limit bound the fetched window exactly like
+  * the reference's cursor (`limit*3` rows from `skip=(page-1)*limit`),
+  * and the adjacent-duplicate merge (cleanDomainLinks,
+  * controller.go:199-254) is then a sequential fold over that ≤300-row
+  * page, as in the reference.
   *
   * Divergence (documented): the reference inherits Mongo's unstable
   * sort on ties, so pagination under ties is nondeterministic there;
   * here the sort appends the full composite key as a tiebreak, making
   * every page deterministic.
   */
-final class LinkDb(links: DataFrame) {
+final class LinkDb private[graft] (source: ServingRows) {
+
+  def this(links: DataFrame) = this(ServingRows.frame(links))
 
   // includes link_subdomain: the compacted store's unique key is
   // (domain, subdomain, path, rawquery, page_host), so without it two
@@ -91,27 +102,14 @@ final class LinkDb(links: DataFrame) {
   }
 
   def query(req: LinkDbRequest): Seq[LinkOut] = {
-    // out-of-range values FALL BACK to the defaults rather than
-    // clamping (controller.go:29-34: limit <= 0 or > 100 → 100)
-    val limit = if (req.limit > 0 && req.limit <= 100) req.limit else 100
-    val page = math.max(req.page, 1)
+    val limit = ServingRows.limitOf(req.limit)
     val (etld1, sub) = UrlFns.splitDomain(req.domain)
     val domainPred =
       if (sub.isEmpty) col("link_domain") === etld1
       else col("link_domain") === etld1 && col("link_subdomain") === sub
-    val filtered = req.filters.flatMap(filterColumn)
-      .foldLeft(links.filter(domainPred))(_ filter _)
-    // Int-safe offset: (page-1)*limit can overflow Int for absurd page
-    // numbers (the reference skips with int64); past Int.MaxValue rows
-    // the page is empty by construction
-    val off = (page - 1).toLong * limit
-    if (off + limit * 3 > Int.MaxValue) return Seq.empty
+    val filter = req.filters.flatMap(filterColumn).foldLeft(domainPred)(_ && _)
     // the reference over-fetches 3x the page because merging can shrink it
-    val window = filtered
-      .orderBy(sortColumns(req): _*)
-      .offset(off.toInt)
-      .limit(limit * 3)
-      .collect() // bounded: <= 3 * 100 rows — this is the serving path
+    val window = source.page(filter, sortColumns(req), req.page, limit, limit * 3)
     val rows = window.map { r =>
       def s(n: String) = Option(r.getAs[String](n)).getOrElse("")
       val linkUrl = showScheme(s("link_scheme")) + "://" + showSub(s("link_subdomain")) +

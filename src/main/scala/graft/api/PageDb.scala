@@ -24,46 +24,45 @@ final case class PageOut(
     pageUrl: String, title: String, ip: String, crawlDate: String,
     noIndex: Int, pageNoFollow: Int)
 
-/** Query surface over a pages DataFrame (WatSource.pages output or
-  * PageStore.read) — the page-side sibling of [[LinkDb]], closing the
-  * loop on the reference's page records (they exist to answer "what do
-  * we know about this page": title, IP, crawl date, robots flags).
+/** Query surface over page records — the page-side sibling of
+  * [[LinkDb]], closing the loop on the reference's page records (they
+  * exist to answer "what do we know about this page": title, IP, crawl
+  * date, robots flags).
   *
-  * Same serving shape as LinkDb: every predicate is a Column (pushed
-  * into the scan; partition-pruned when the source is a PageStore
-  * domain read), the sort carries a full deterministic key, and only
-  * the requested ≤100-row window is ever collected.
+  * Same shape as LinkDb: [[query]] defines a request once (every
+  * predicate a Column, a sort carrying a full deterministic key, the
+  * requested ≤100-row window, the rendering), and the rows come from
+  * either path: `new PageDb(pages)` over any pages DataFrame
+  * (WatSource.pages output or PageStore.read) runs it as a Spark plan;
+  * `Pipeline.pageDb` (what the server binds) reads the eTLD+1's one
+  * page-store bucket directory in the calling thread, with no Spark
+  * job ([[ServingRows]]).
   */
-final class PageDb(pages: DataFrame) {
+final class PageDb private[graft] (source: ServingRows) {
+
+  def this(pages: DataFrame) = this(ServingRows.frame(pages))
 
   private def anyMatch(c: Column, pattern: String): Column =
     c.isNotNull && c.rlike(s"(?i)$pattern")
 
   def query(req: PageDbRequest): Seq[PageOut] = {
     // same fallback convention as LinkDb (controller.go:29-34)
-    val limit = if (req.limit > 0 && req.limit <= 100) req.limit else 100
-    val page = math.max(req.page, 1)
+    val limit = ServingRows.limitOf(req.limit)
     // page_host is lowercased at extraction time (UrlFns.urlHost), so a
     // bare equality keeps the predicate pushable into the parquet scan
     // — wrapping the column in lower() would defeat the row-group
     // pruning PageStore's in-bucket sort exists for
-    val base = pages.filter(col("page_host") === req.host.toLowerCase)
-    val filtered = Seq(
+    val filter = Seq(
       req.pathAny.map(p => anyMatch(col("page_path"), p)),
       req.titleAny.map(t => anyMatch(col("title"), t))
-    ).flatten.foldLeft(base)(_ filter _)
-    val off = (page - 1).toLong * limit
-    if (off + limit > Int.MaxValue) return Seq.empty
-    filtered
-      // the FULL remaining row as tiebreak: otherwise two captures of
-      // one URL differing only in title tie completely and pagination
-      // at the boundary becomes engine-arbitrary
-      .orderBy(col("page_path").asc, col("page_rawquery").asc,
-        col("crawl_date").asc, col("ip").asc, col("title").asc,
-        col("page_scheme").asc, col("noindex").asc, col("page_nofollow").asc)
-      .offset(off.toInt)
-      .limit(limit)
-      .collect() // bounded serving window, like LinkDb.query
+    ).flatten.foldLeft(col("page_host") === req.host.toLowerCase)(_ && _)
+    // the FULL remaining row as tiebreak: otherwise two captures of
+    // one URL differing only in title tie completely and pagination
+    // at the boundary becomes engine-arbitrary
+    val order = Seq(col("page_path").asc, col("page_rawquery").asc,
+      col("crawl_date").asc, col("ip").asc, col("title").asc,
+      col("page_scheme").asc, col("noindex").asc, col("page_nofollow").asc)
+    source.page(filter, order, req.page, limit, limit)
       .map { r =>
         def s(n: String) = Option(r.getAs[String](n)).getOrElse("")
         val url = (if (s("page_scheme") == "1") "http" else "https") + "://" +
@@ -72,6 +71,6 @@ final class PageDb(pages: DataFrame) {
           (if (s("page_rawquery").isEmpty) "" else "?" + s("page_rawquery"))
         PageOut(url, s("title"), s("ip"), s("crawl_date"),
           r.getAs[Int]("noindex"), r.getAs[Int]("page_nofollow"))
-      }.toSeq
+      }
   }
 }

@@ -85,12 +85,26 @@ object LinkStore {
     * row groups and rows.
     */
   def readDomain(spark: SparkSession, path: String, domain: String): DataFrame =
-    readBucket(spark, path, bucketOfDomain(domain))
-      .filter(col("link_domain") === domain)
+    readBucket(spark, path, bucketOfDomain(domain)).filter(ofDomain(domain))
+
+  /** [[readDomain]] before anything is read: the listing of the
+    * domain's bucket directory and the domain predicate. The serving
+    * bind (Pipeline.linkDb) evaluates the predicate over the listing in
+    * its own thread, with no Spark job.
+    */
+  private[graft] def domainBucket(spark: SparkSession, path: String,
+      domain: String): (StoreGen.Partitions, Column) =
+    (listBucket(spark, path, bucketOfDomain(domain)), ofDomain(domain))
+
+  private def ofDomain(domain: String): Column = col("link_domain") === domain
+
+  /** One `domain_bucket` directory of a link or page store, listed. */
+  private[sinks] def listBucket(spark: SparkSession, path: String,
+      bucket: Int): StoreGen.Partitions =
+    StoreGen.listPartitions(spark, path, "", "domain_bucket", Seq(bucket))
+      .get // sub = "": the data of a resolved generation is always present
 
   /** One `domain_bucket` of a link or page store, bucket predicate kept. */
   private[sinks] def readBucket(spark: SparkSession, path: String, bucket: Int): DataFrame =
-    StoreGen.readPartitions(spark, path, "", "domain_bucket", Seq(bucket))
-      .get // sub = "": the data of a resolved generation is always present
-      .filter(col("domain_bucket") === bucket)
+    listBucket(spark, path, bucket).frame(spark).filter(col("domain_bucket") === bucket)
 }

@@ -1,6 +1,6 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Domain-bucketed parquet store for page records — the page-side
@@ -34,5 +34,14 @@ object PageStore {
     */
   def readDomain(spark: SparkSession, path: String, domain: String): DataFrame =
     LinkStore.readBucket(spark, path, LinkStore.bucketOfDomain(domain))
-      .filter(col("page_domain") === domain)
+      .filter(ofDomain(domain))
+
+  /** [[readDomain]] before anything is read, for the serving bind
+    * (Pipeline.pageDb; see [[LinkStore.domainBucket]]).
+    */
+  private[graft] def domainBucket(spark: SparkSession, path: String,
+      domain: String): (StoreGen.Partitions, Column) =
+    (LinkStore.listBucket(spark, path, LinkStore.bucketOfDomain(domain)), ofDomain(domain))
+
+  private def ofDomain(domain: String): Column = col("page_domain") === domain
 }

@@ -20,6 +20,14 @@ object GraftColumnBridge {
     */
   def expressionEager(c: Column): Expression =
     classic.ColumnNodeToExpressionConverter.apply(c.node)
+
+  /** The data source filter a resolved predicate translates to, as a
+    * file scan pushes it (`DataSourceStrategy.translateFilter` is
+    * `protected[sql]`).
+    */
+  def sourceFilter(e: Expression): Option[sources.Filter] =
+    execution.datasources.DataSourceStrategy.translateFilter(e,
+      supportNestedPredicatePushdown = false)
 }
 
 /** DataFrame-from-LogicalPlan bridge (`Dataset.ofRows` is private[sql]). */

@@ -31,7 +31,7 @@ class AnnIndexStoreSpec extends SparkSpec {
   }
 
   test("ANN index artifact: fit publishes once, a fresh session loads the identical index") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_annstore").toString
+    val dir = SparkSpec.tempDir("graft_annstore").toString
     try {
       val n = 300000L
       writeClusteredCorpus(dir, n)
@@ -86,7 +86,7 @@ class AnnIndexStoreSpec extends SparkSpec {
   }
 
   test("delta ingest: a spread +5% batch assigns with no refit; a concentrated one trips the gauge") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_annstore_delta").toString
+    val dir = SparkSpec.tempDir("graft_annstore_delta").toString
     try {
       val n = 300000L
       writeClusteredCorpus(dir, n)

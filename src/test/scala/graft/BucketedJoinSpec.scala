@@ -122,7 +122,7 @@ class BucketedJoinSpec extends SparkSpec {
       if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rmrf)
       f.delete(): Unit
     }
-    val src = java.nio.file.Files.createTempDirectory("graft-mp-src").toFile
+    val src = SparkSpec.tempDir("graft-mp-src").toFile
     val key = src.getAbsolutePath.replaceAll("/+$", "").replaceAll("[^A-Za-z0-9._-]", "_")
     val parent = new java.io.File("/tmp/graft_bucketed/v2/" + key)
     try {
@@ -182,7 +182,7 @@ class BucketedJoinSpec extends SparkSpec {
       if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rmrf)
       f.delete(): Unit
     }
-    val src = java.nio.file.Files.createTempDirectory("graft-gc-src").toFile
+    val src = SparkSpec.tempDir("graft-gc-src").toFile
     val key = src.getAbsolutePath.replaceAll("/+$", "").replaceAll("[^A-Za-z0-9._-]", "_")
     val parent = new java.io.File("/tmp/graft_bucketed/v2/" + key)
     def layouts(): Seq[String] =

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
 class DynamicPruningSpec extends SparkSpec {
 
   test("a computed domain set prunes the bucketed store scan at runtime") {
-    val dir = java.nio.file.Files.createTempDirectory("dppstore").toString
+    val dir = SparkSpec.tempDir("dppstore").toString
     LinkStore.write(Tables.links(spark, sfDir), s"$dir/links")
 
     // a COMPUTED dim (no literal domains at plan time): the two most

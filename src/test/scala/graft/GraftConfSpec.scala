@@ -7,7 +7,7 @@ import java.nio.file.Files
 class GraftConfSpec extends AnyFunSuite {
 
   test("the scratch sweep removes dead runs' directories and keeps live ones") {
-    val parent = Files.createTempDirectory("graft-scratch")
+    val parent = SparkSpec.tempDir("graft-scratch")
     // a PID that certainly belonged to a process that has exited
     val p = new ProcessBuilder("true").start()
     p.waitFor()

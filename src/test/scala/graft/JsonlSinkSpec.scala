@@ -9,7 +9,7 @@ class JsonlSinkSpec extends SparkSpec {
   test("JSONL export round-trips byte-exactly and shards deterministically") {
     val docs = Tables.table(spark, sfDir, "documents")
       .select("doc_id", "source", "text")
-    val out = Files.createTempDirectory("jsonl").toString + "/export"
+    val out = SparkSpec.tempDir("jsonl").toString + "/export"
     JsonlSink.write(docs, out, shards = 4)
     // one shard dir per shard id, one gzip part file each
     val shardDirs = new java.io.File(out).listFiles()
@@ -29,7 +29,7 @@ class JsonlSinkSpec extends SparkSpec {
     assert(key(back) == key(docs))
     // deterministic shard membership: a re-export lands every doc in
     // the same shard id regardless of input partitioning
-    val out2 = Files.createTempDirectory("jsonl2").toString + "/export"
+    val out2 = SparkSpec.tempDir("jsonl2").toString + "/export"
     JsonlSink.write(docs.repartition(13), out2, shards = 4)
     def shardOf(dir: String): Map[Long, Long] =
       spark.read.schema(docs.schema).json(dir)

@@ -105,6 +105,26 @@ class LinkApiSpec extends SparkSpec {
     }
   }
 
+  test("sequential requests on one connection do not wait out a delayed ACK") {
+    // without TCP_NODELAY a response's body segment waits for the
+    // client's (delayed) ACK of its header segment: ~40 ms a request
+    val http11 = HttpClient.newBuilder().version(HttpClient.Version.HTTP_1_1).build()
+    withServer() { port =>
+      def healthMs(): Double = {
+        val t0 = System.nanoTime()
+        val r = http11.send(
+          HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port/api/health")).GET().build(),
+          HttpResponse.BodyHandlers.ofString())
+        assert(r.statusCode() == 200)
+        (System.nanoTime() - t0) / 1e6
+      }
+      (1 to 10).foreach(_ => healthMs())
+      val ms = IndexedSeq.fill(40)(healthMs()).sorted
+      val p50 = (ms(19) + ms(20)) / 2
+      assert(p50 < 20, f"p50 $p50%.1f ms over 40 health requests: ${ms.map(m => f"$m%.1f")}")
+    }
+  }
+
   test("fixed-window rate limiting trips at the limit and resets after it") {
     var now = 0L
     withServer(rateLimitMax = 3, clock = () => now) { port =>
@@ -180,7 +200,7 @@ class LinkApiSpec extends SparkSpec {
     // the REAL production binding: fresh partition-pruned page-store
     // read per request (Pipeline.pageDb), store built by the real import
     val fixture = new WatSourceSpec {}.fixturePath
-    val out = java.nio.file.Files.createTempDirectory("pagesapi").toString
+    val out = SparkSpec.tempDir("pagesapi").toString
     Pipeline.importSegments(spark, Seq(fixture), out, stats = false)
     val srv = new LinkApiServer(domain => Pipeline.linkDb(spark, out, domain),
       port = 0, pageDbOf = Some(h => Pipeline.pageDb(spark, out, h))).start()
@@ -288,7 +308,7 @@ class LinkApiSpec extends SparkSpec {
 
   test("/api/pages requests spanning a page-store swap succeed via rebind-and-retry") {
     val fixture = new WatSourceSpec {}.fixturePath
-    val out = java.nio.file.Files.createTempDirectory("pagesswap").toString
+    val out = SparkSpec.tempDir("pagesswap").toString
     Pipeline.importSegments(spark, Seq(fixture), out, stats = false)
     // a memory-pinned snapshot of the page records, so re-publishing
     // never reads the store being swapped underneath it
@@ -341,7 +361,7 @@ class LinkApiSpec extends SparkSpec {
     // directory out from under in-flight requests — the
     // concurrent-reader window foldSegments/compactStream opens.
     val fixture = new WatSourceSpec {}.fixturePath
-    val out = java.nio.file.Files.createTempDirectory("swapstore").toString
+    val out = SparkSpec.tempDir("swapstore").toString
     Pipeline.importSegments(spark, Seq(fixture), out, stats = false)
     // seed a streamed batch so each compactStream call has input and
     // performs a full prepare+swap cycle (double-counted qty is fine
@@ -505,7 +525,7 @@ class LinkApiSpec extends SparkSpec {
   }
 
   test("a never-created store root gets exactly the missing-root binds") {
-    val root = java.nio.file.Files.createTempDirectory("noroot").toString + "/never"
+    val root = SparkSpec.tempDir("noroot").toString + "/never"
     val calls = new java.util.concurrent.atomic.AtomicInteger(0)
     val srv = new LinkApiServer(domain => {
       calls.incrementAndGet()

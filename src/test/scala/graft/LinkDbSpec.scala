@@ -64,7 +64,7 @@ class LinkDbSpec extends SparkSpec {
   }
 
   test("LinkStore round-trip prunes partitions for a domain read") {
-    val path = Files.createTempDirectory("linkstore").toString
+    val path = SparkSpec.tempDir("linkstore").toString
     LinkStore.write(compacted, path)
     val one = LinkStore.readDomain(spark, path, "d3.com")
     val expect = compacted.filter(org.apache.spark.sql.functions.col("link_domain") === "d3.com")
@@ -100,7 +100,7 @@ class LinkDbSpec extends SparkSpec {
 
   test("validated store write fails loudly on an invalid domain") {
     import org.apache.spark.sql.functions.{col, lit, when}
-    val path = Files.createTempDirectory("linkstorebad").toString
+    val path = SparkSpec.tempDir("linkstorebad").toString
     // valid rows sail through with validation on
     LinkStore.write(compacted, path, validate = true)
     assert(LinkStore.read(spark, path).count() == compacted.count())
@@ -109,7 +109,7 @@ class LinkDbSpec extends SparkSpec {
       when(col("link_text") === compacted.select("link_text").head().getString(0),
         lit("bad_domain")).otherwise(col("link_domain")))
     val e = intercept[Exception] {
-      LinkStore.write(corrupt, Files.createTempDirectory("linkstorebad2").toString,
+      LinkStore.write(corrupt, SparkSpec.tempDir("linkstorebad2").toString,
         validate = true)
     }
     def messages(t: Throwable): Seq[String] =

@@ -8,7 +8,7 @@ class PipelineSpec extends SparkSpec {
   test("WAT segments import end-to-end and serve LinkDB queries") {
     // reuse the WatSourceSpec fixture generator through a fresh instance
     val fixture = new WatSourceSpec {}.fixturePath
-    val out = Files.createTempDirectory("graftstore").toString
+    val out = SparkSpec.tempDir("graftstore").toString
     val stats = Pipeline.importSegments(spark, Seq(fixture), out,
       ignoreDomains = Seq("ignored.example"))
     // 4 valid pages (sitea, b.org, canon, blog.user.github.io) and 6
@@ -33,10 +33,10 @@ class PipelineSpec extends SparkSpec {
   test("multi-segment import reads every WAT file") {
     val fixture = new WatSourceSpec {}.fixturePath
     // second segment = a copy of the first under a different name
-    val seg2 = java.nio.file.Files.createTempDirectory("wat2")
+    val seg2 = SparkSpec.tempDir("wat2")
       .resolve("seg2.wat.gz")
     java.nio.file.Files.copy(java.nio.file.Paths.get(fixture), seg2)
-    val out = Files.createTempDirectory("graftstore2").toString
+    val out = SparkSpec.tempDir("graftstore2").toString
     val stats = Pipeline.importSegments(spark, Seq(fixture, seg2.toString), out)
     assert(stats.pages == 8, "both segments' pages must load")
     assert(stats.links == 12, "raw link count doubles with the duplicated segment")
@@ -48,15 +48,15 @@ class PipelineSpec extends SparkSpec {
     // two one-file segments in distinct parent dirs (segment id = dir name)
     val fixture = new WatSourceSpec {}.fixturePath
     def segCopy(name: String): String = {
-      val d = Files.createTempDirectory(name)
+      val d = SparkSpec.tempDir(name)
       val f = d.resolve("part.wat.gz")
       Files.copy(java.nio.file.Paths.get(fixture), f)
       f.toString
     }
     val (f1, f2) = (segCopy("sega"), segCopy("segb"))
     val (id1, id2) = (SegmentManifest.segmentId(f1), SegmentManifest.segmentId(f2))
-    val out = Files.createTempDirectory("manifeststore").toString
-    val manifest = Files.createTempFile("wat", ".paths")
+    val out = SparkSpec.tempDir("manifeststore").toString
+    val manifest = SparkSpec.tempFile("wat", ".paths")
     Files.writeString(manifest, s"# comment line\n$f1\n\n$f2\n")
 
     // run 1 imports only the first segment (bounded run), as if the
@@ -126,7 +126,7 @@ class PipelineSpec extends SparkSpec {
 
     // three one-file segments named like Common Crawl segment dirs
     val fixture = new WatSourceSpec {}.fixturePath
-    val root = Files.createTempDirectory("selseg")
+    val root = SparkSpec.tempDir("selseg")
     def segCopy(ord: Int): String = {
       val d = Files.createDirectories(root.resolve(s"1687947420.$ord"))
       val f = d.resolve("part.wat.gz")
@@ -134,8 +134,8 @@ class PipelineSpec extends SparkSpec {
       f.toString
     }
     val files = Seq(1, 2, 3).map(segCopy)
-    val out = Files.createTempDirectory("selstore").toString
-    val manifest = Files.createTempFile("sel", ".paths")
+    val out = SparkSpec.tempDir("selstore").toString
+    val manifest = SparkSpec.tempFile("sel", ".paths")
     Files.writeString(manifest, files.mkString("", "\n", "\n"))
 
     // range selector: only segments 2-3 run; segment 1 untouched/unlisted
@@ -160,7 +160,7 @@ class PipelineSpec extends SparkSpec {
 
   test("pageDb serves page records from the partition-pruned page store") {
     val fixture = new WatSourceSpec {}.fixturePath
-    val out = Files.createTempDirectory("pagestore").toString
+    val out = SparkSpec.tempDir("pagestore").toString
     Pipeline.importSegments(spark, Seq(fixture), out)
     val res = Pipeline.pageDb(spark, out, "www.sitea.com")
       .query(api.PageDbRequest("www.sitea.com"))
@@ -185,7 +185,7 @@ class PipelineSpec extends SparkSpec {
 
   test("linkDb prunes the store by eTLD+1 so subdomain requests work") {
     val fixture = new WatSourceSpec {}.fixturePath
-    val out = Files.createTempDirectory("graftstore3").toString
+    val out = SparkSpec.tempDir("graftstore3").toString
     Pipeline.importSegments(spark, Seq(fixture), out)
     val viaSub = Pipeline.linkDb(spark, out, "sub.ext2.co.uk")
       .query(LinkDbRequest("sub.ext2.co.uk"))
@@ -196,12 +196,12 @@ class PipelineSpec extends SparkSpec {
   test("staged fetch retries a flaky source and completes the import") {
     import graft.sources.SegmentManifest
     val fixture = new WatSourceSpec {}.fixturePath
-    val d = Files.createTempDirectory("flakyseg")
+    val d = SparkSpec.tempDir("flakyseg")
     val f = d.resolve("part.wat.gz")
     Files.copy(java.nio.file.Paths.get(fixture), f)
-    val out = Files.createTempDirectory("flakystore").toString
-    val staging = Files.createTempDirectory("flakystaging").toString
-    val manifest = Files.createTempFile("flaky", ".paths")
+    val out = SparkSpec.tempDir("flakystore").toString
+    val staging = SparkSpec.tempDir("flakystaging").toString
+    val manifest = SparkSpec.tempFile("flaky", ".paths")
     Files.writeString(manifest, f.toString + "\n")
 
     // a source that fails twice then delivers — the DownloadFile loop's
@@ -223,7 +223,7 @@ class PipelineSpec extends SparkSpec {
     assert(!Files.exists(java.nio.file.Paths.get(staging, SegmentManifest.segmentId(f.toString))))
 
     // a permanently-failing source exhausts its attempts loudly
-    val out2 = Files.createTempDirectory("flakystore2").toString
+    val out2 = SparkSpec.tempDir("flakystore2").toString
     val always: (String, String) => Unit =
       (_, _) => throw new java.io.IOException("gone")
     val e = intercept[java.io.IOException] {
@@ -237,11 +237,11 @@ class PipelineSpec extends SparkSpec {
   test("stageSegmentFiles skips already-staged files and backs off between attempts") {
     import graft.sources.SegmentManifest
     val fixture = new WatSourceSpec {}.fixturePath
-    val d = Files.createTempDirectory("stageseg")
+    val d = SparkSpec.tempDir("stageseg")
     val f = d.resolve("part.wat.gz")
     Files.copy(java.nio.file.Paths.get(fixture), f)
     val seg = SegmentManifest.Segment(SegmentManifest.segmentId(f.toString), Seq(f.toString))
-    val staging = Files.createTempDirectory("stagedir").toString
+    val staging = SparkSpec.tempDir("stagedir").toString
 
     var sleeps = List.empty[Long]
     var attempts = 0
@@ -267,25 +267,25 @@ class PipelineSpec extends SparkSpec {
     import org.apache.spark.sql.functions.{col, sum}
     val fixture = new WatSourceSpec {}.fixturePath
     def segCopy(name: String): String = {
-      val dd = Files.createTempDirectory(name)
+      val dd = SparkSpec.tempDir(name)
       val ff = dd.resolve("part.wat.gz")
       Files.copy(java.nio.file.Paths.get(fixture), ff)
       ff.toString
     }
     val files = Seq(segCopy("afa"), segCopy("afb"), segCopy("afc"))
     def manifestOf(fs: Seq[String]): String = {
-      val m = Files.createTempFile("af", ".paths")
+      val m = SparkSpec.tempFile("af", ".paths")
       Files.writeString(m, fs.mkString("", "\n", "\n"))
       m.toString
     }
     // periodic: fold after every segment (threshold 1)
-    val outA = Files.createTempDirectory("afper").toString
+    val outA = SparkSpec.tempDir("afper").toString
     Pipeline.importManifest(spark, manifestOf(files), outA, autoFoldEvery = 1)
     // every segment folded as it completed → no segment dirs remain
     assert(SegmentManifest.completedSegments(spark, outA).isEmpty)
     assert(Pipeline.foldedSegments(spark, s"$outA/links").size == 3)
     // fold-once: import everything, then one manual fold
-    val outB = Files.createTempDirectory("afonce").toString
+    val outB = SparkSpec.tempDir("afonce").toString
     Pipeline.importManifest(spark, manifestOf(files), outB)
     Pipeline.foldSegments(spark, outB)
     def canon(out: String): (Seq[String], Long) = {
@@ -298,7 +298,7 @@ class PipelineSpec extends SparkSpec {
     assert(canon(outA)._2 == 18, "3 identical segments x 6 links, nothing double-counted")
 
     // threshold above the backlog → no fold runs
-    val outC = Files.createTempDirectory("afnone").toString
+    val outC = SparkSpec.tempDir("afnone").toString
     Pipeline.importManifest(spark, manifestOf(Seq(files.head)), outC, autoFoldEvery = 5)
     assert(Pipeline.foldedSegments(spark, s"$outC/links").isEmpty)
     assert(SegmentManifest.completedSegments(spark, outC).size == 1)
@@ -312,18 +312,18 @@ class PipelineSpec extends SparkSpec {
     import org.apache.spark.sql.functions.{col, sum}
     val fixture = new WatSourceSpec {}.fixturePath
     def segCopy(name: String): String = {
-      val dd = Files.createTempDirectory(name)
+      val dd = SparkSpec.tempDir(name)
       val ff = dd.resolve("part.wat.gz")
       Files.copy(java.nio.file.Paths.get(fixture), ff)
       ff.toString
     }
     def manifestOf(fs: Seq[String]): String = {
-      val m = Files.createTempFile("cf", ".paths")
+      val m = SparkSpec.tempFile("cf", ".paths")
       Files.writeString(m, fs.mkString("", "\n", "\n"))
       m.toString
     }
     val filesA = Seq(segCopy("cfa"), segCopy("cfb"))
-    val out = Files.createTempDirectory("cfstore").toString
+    val out = SparkSpec.tempDir("cfstore").toString
     Pipeline.importManifest(spark, manifestOf(filesA), out)
 
     // writer A: a fold held open mid-flight (leases down, no data moved
@@ -357,7 +357,7 @@ class PipelineSpec extends SparkSpec {
 
     // the contended store equals a sequential fold of identical segments
     val filesB = Seq(segCopy("cfc"), segCopy("cfd"))
-    val outSeq = Files.createTempDirectory("cfseq").toString
+    val outSeq = SparkSpec.tempDir("cfseq").toString
     Pipeline.importManifest(spark, manifestOf(filesB), outSeq)
     Pipeline.foldSegments(spark, outSeq)
     def canon(o: String): (Seq[String], Long) = {
@@ -376,7 +376,7 @@ class PipelineSpec extends SparkSpec {
     // delta 2 is a DIFFERENT segment: two new pages linking to new
     // hosts, so the second fold genuinely grows the graph
     def watSeg(name: String, lines: Seq[String]): String = {
-      val d = Files.createTempDirectory(name)
+      val d = SparkSpec.tempDir(name)
       val f = d.resolve("part.wat.gz").toFile
       val w = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
         new java.util.zip.GZIPOutputStream(new java.io.FileOutputStream(f)), "UTF-8"))
@@ -400,9 +400,9 @@ class PipelineSpec extends SparkSpec {
       page("http://www.delta.io/d", Seq(
         "http://hub.example.com/z" -> "h", "http://newhost.com/n" -> "n")),
       page("http://gamma.net/p", Seq("http://newhost.com/m" -> "n"))))
-    val out = Files.createTempDirectory("rkstore").toString
+    val out = SparkSpec.tempDir("rkstore").toString
     def manifestOf(fs: Seq[String]): String = {
-      val m = Files.createTempFile("rk", ".paths")
+      val m = SparkSpec.tempFile("rk", ".paths")
       Files.writeString(m, fs.mkString("", "\n", "\n"))
       m.toString
     }
@@ -440,7 +440,7 @@ class PipelineSpec extends SparkSpec {
 
   test("exportCorpus delivers gate->dedup->semdedup->decontaminate->mix as JSONL shards") {
     import org.apache.spark.sql.functions._
-    val out = Files.createTempDirectory("export").toString + "/corpus"
+    val out = SparkSpec.tempDir("export").toString + "/corpus"
     // embedding frame where doc b+1 is a semantic near-dup of doc b
     // (for b % 25 == 0): the q70 stage must drop the b+1 docs
     val e = Tables.table(spark, sfDir, "embeddings")
@@ -489,7 +489,7 @@ class PipelineSpec extends SparkSpec {
     // membership is input-partitioning-independent: a re-export lands
     // every doc in the same shard id (the sink hashes doc_id, and the
     // curation stages are deterministic)
-    val out2 = Files.createTempDirectory("export2").toString + "/corpus"
+    val out2 = SparkSpec.tempDir("export2").toString + "/corpus"
     val stats2 = Pipeline.exportCorpus(spark, sfDir, out2,
       mixTarget = 40, docsPerShard = 10, semdedupEmb = Some(emb))
     assert(stats2 == stats)
@@ -503,7 +503,7 @@ class PipelineSpec extends SparkSpec {
 
   test("exportCorpus composes boilerplate strip, line dedup and DSIR selection") {
     import org.apache.spark.sql.functions._
-    val out = Files.createTempDirectory("export3").toString + "/corpus"
+    val out = SparkSpec.tempDir("export3").toString + "/corpus"
     val target = col("source").isin("src0", "src1")
     val stats = Pipeline.exportCorpus(spark, sfDir, out,
       mixTarget = 40, docsPerShard = 10,
@@ -533,7 +533,7 @@ class PipelineSpec extends SparkSpec {
     val share = srcs.count(s => s == "src0" || s == "src1").toDouble / srcs.length
     assert(share >= 0.1, s"target share $share below base rate")
     // the composed recipe is deterministic end to end
-    val out2 = Files.createTempDirectory("export4").toString + "/corpus"
+    val out2 = SparkSpec.tempDir("export4").toString + "/corpus"
     val stats2 = Pipeline.exportCorpus(spark, sfDir, out2,
       mixTarget = 40, docsPerShard = 10,
       lineDedup = true, boilerplate = true, contamRatePct = Some(20),
@@ -543,7 +543,7 @@ class PipelineSpec extends SparkSpec {
 
   test("exportCorpus gate=false feeds the dedup stages the whole train split") {
     import org.apache.spark.sql.functions._
-    val out = Files.createTempDirectory("export_ng").toString + "/corpus"
+    val out = SparkSpec.tempDir("export_ng").toString + "/corpus"
     val stats = Pipeline.exportCorpus(spark, sfDir, out,
       mixTarget = 40, docsPerShard = 10, gate = false)
     val nTrain = Tables.table(spark, sfDir, "documents")
@@ -554,7 +554,7 @@ class PipelineSpec extends SparkSpec {
     assert(stats.deduped <= stats.gated)
     assert(stats.exported > 0 && stats.exported <= 40)
     val gatedRun = Pipeline.exportCorpus(spark, sfDir,
-      Files.createTempDirectory("export_g").toString + "/corpus",
+      SparkSpec.tempDir("export_g").toString + "/corpus",
       mixTarget = 40, docsPerShard = 10)
     assert(gatedRun.gated < stats.gated,
       "the gate must keep strictly fewer docs than no-gate")
@@ -620,7 +620,7 @@ class PipelineSpec extends SparkSpec {
 
   test("publishRankedStore lands store + _RANKS in one generation; serving reads prune") {
     import org.apache.spark.sql.functions._
-    val out = Files.createTempDirectory("pubrank").toString
+    val out = SparkSpec.tempDir("pubrank").toString
     val raw = Tables.links(spark, sfDir)
     val tol = 1e-9
 
@@ -659,7 +659,7 @@ class PipelineSpec extends SparkSpec {
       s"republish must warm-start: warm=$warmIters cold=$coldIters")
 
     // a store with no published ranks serves the empty frame, not an error
-    val bare = Files.createTempDirectory("norank").toString
+    val bare = SparkSpec.tempDir("norank").toString
     assert(Pipeline.hostRanksFor(spark, bare, Seq("x.com")).isEmpty)
     assert(Pipeline.hostRankOf(spark, bare, "x.com").isEmpty)
   }

@@ -14,8 +14,6 @@ import org.apache.spark.sql.functions._
   */
 class SealedDirSpec extends SparkSpec {
 
-  private def tempDir(prefix: String): Path = Files.createTempDirectory(prefix)
-
   /** Entries under `parent` other than the build lock files. */
   private def entries(parent: Path): Seq[String] =
     Option(parent.toFile.list()).getOrElse(Array.empty[String])
@@ -25,7 +23,7 @@ class SealedDirSpec extends SparkSpec {
     Files.isRegularFile(Paths.get(path, SealedDir.Seal))
 
   test("two threads asking for the same key run the build once") {
-    val parent = tempDir("graft-sealed-threads")
+    val parent = SparkSpec.tempDir("graft-sealed-threads")
     val key = SealedDir.digest("threads")
     val builds = new AtomicInteger()
     val start = new CountDownLatch(1)
@@ -54,7 +52,7 @@ class SealedDirSpec extends SparkSpec {
   }
 
   test("a second JVM blocks on the build lock, then attaches the sealed result without building") {
-    val parent = tempDir("graft-sealed-fork")
+    val parent = SparkSpec.tempDir("graft-sealed-fork")
     val key = SealedDir.digest("fork")
     val java = Paths.get(sys.props("java.home"), "bin", "java").toString
     var child: Process = null
@@ -83,7 +81,7 @@ class SealedDirSpec extends SparkSpec {
   }
 
   test("an unsealed leftover at the final path and stray build dirs are replaced") {
-    val parent = tempDir("graft-sealed-leftover")
+    val parent = SparkSpec.tempDir("graft-sealed-leftover")
     val key = SealedDir.digest("leftover")
     val dest = Paths.get(SealedDir.pathOf(parent.toString, "art", key))
     try {
@@ -101,7 +99,7 @@ class SealedDirSpec extends SparkSpec {
   }
 
   test("a build that throws leaves neither the final directory nor a .tmp sibling") {
-    val parent = tempDir("graft-sealed-throw")
+    val parent = SparkSpec.tempDir("graft-sealed-throw")
     val key = SealedDir.digest("throw")
     try {
       val e = intercept[IllegalStateException] {
@@ -116,7 +114,7 @@ class SealedDirSpec extends SparkSpec {
   }
 
   test("a sealed directory is returned without calling build") {
-    val parent = tempDir("graft-sealed-hit")
+    val parent = SparkSpec.tempDir("graft-sealed-hit")
     val key = SealedDir.digest("hit")
     val dest = Paths.get(SealedDir.pathOf(parent.toString, "art", key))
     try {
@@ -132,8 +130,8 @@ class SealedDirSpec extends SparkSpec {
   }
 
   test("deleteRecursively removes a symlink to an outside directory, not the files behind it") {
-    val outside = tempDir("graft-sealed-outside")
-    val victim = tempDir("graft-sealed-victim")
+    val outside = SparkSpec.tempDir("graft-sealed-outside")
+    val victim = SparkSpec.tempDir("graft-sealed-victim")
     try {
       Files.writeString(outside.resolve("keep"), "kept")
       Files.writeString(victim.resolve("own"), "gone")
@@ -185,7 +183,7 @@ class SealedDirSpec extends SparkSpec {
   }
 
   test("the ranked store fixture is keyed by its source files, not its sf path") {
-    val src = tempDir("graft-rankstore-src")
+    val src = SparkSpec.tempDir("graft-rankstore-src")
     val layouts = Paths.get(BucketedTables.Root, BucketedTables.dirKey(src.toString))
     try {
       Seq("orders", "customer").foreach { t =>

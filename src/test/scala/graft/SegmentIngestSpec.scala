@@ -21,13 +21,13 @@ class SegmentIngestSpec extends SparkSpec {
     val manifest = s"$fixture/manifest/wat.paths"
 
     // batch: drain the whole manifest in one call
-    val batchOut = Files.createTempDirectory("ingest-batch").toString
+    val batchOut = SparkSpec.tempDir("ingest-batch").toString
     val stats = Pipeline.importManifest(spark, manifest, batchOut)
     assert(stats.imported.size == ManifestFixture.Segments && stats.remaining.isEmpty)
 
     // stream: watch the manifest DIRECTORY, AvailableNow drain
-    val streamOut = Files.createTempDirectory("ingest-stream").toString
-    val ckpt = Files.createTempDirectory("ingest-ckpt").toString
+    val streamOut = SparkSpec.tempDir("ingest-stream").toString
+    val ckpt = SparkSpec.tempDir("ingest-ckpt").toString
     SegmentIngest.start(spark, s"$fixture/manifest", streamOut, ckpt)
       .awaitTermination()
 
@@ -47,9 +47,9 @@ class SegmentIngestSpec extends SparkSpec {
       .split("\n").filter(l => l.nonEmpty && !l.startsWith("#")).toSeq
     assert(allLines.size == ManifestFixture.Segments)
 
-    val watched = Files.createTempDirectory("ingest-frag").toString
-    val out = Files.createTempDirectory("ingest-incr").toString
-    val ckpt = Files.createTempDirectory("ingest-incr-ckpt").toString
+    val watched = SparkSpec.tempDir("ingest-frag").toString
+    val out = SparkSpec.tempDir("ingest-incr").toString
+    val ckpt = SparkSpec.tempDir("ingest-incr-ckpt").toString
 
     // fragment 1: first segment only
     Files.writeString(java.nio.file.Paths.get(s"$watched/frag1.paths"), allLines.head + "\n")
@@ -86,7 +86,7 @@ class SegmentIngestSpec extends SparkSpec {
     val fixture = ManifestFixture.dir()
     val lines = Files.readString(java.nio.file.Paths.get(s"$fixture/manifest/wat.paths"))
       .split("\n").toSeq
-    val out = Files.createTempDirectory("ingest-replay").toString
+    val out = SparkSpec.tempDir("ingest-replay").toString
     val first = SegmentIngest.importLines(spark, lines, out)
     assert(first.size == ManifestFixture.Segments)
     val second = SegmentIngest.importLines(spark, lines, out)

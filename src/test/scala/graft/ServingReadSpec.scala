@@ -18,20 +18,10 @@ import java.nio.file.{Files, Paths}
   */
 class ServingReadSpec extends SparkSpec {
 
-  /** links + pages + `_RANKS`: the WAT fixture imported and folded
-    * with rank maintenance, as the server sees a production store.
-    */
-  private def foldedStore(prefix: String, segments: Int = 1): (String, java.nio.file.Path) = {
-    val fixture = new WatSourceSpec {}.fixturePath
-    val out = Files.createTempDirectory(prefix).toString
-    val manifest = Files.createTempFile(prefix, ".paths")
-    Files.writeString(manifest, fixture + "\n")
-    Pipeline.importManifest(spark, manifest.toString, out)
-    Pipeline.foldSegments(spark, out, maintainRanks = true, rankTol = 1e-9)
-    (out, manifest)
-  }
+  private def foldedStore(prefix: String): (String, java.nio.file.Path) =
+    ServingReadSpec.foldedStore(spark, prefix)
 
-  private lazy val store: String = foldedStore("servingread")._1
+  private def store: String = ServingReadSpec.store
 
   private val absent = Seq("absent-one.com", "absent-two.org", "absent-three.co.uk")
 
@@ -72,7 +62,7 @@ class ServingReadSpec extends SparkSpec {
     } finally sc.removeSparkListener(listener)
   }
 
-  test("a bind of an already-bound generation runs no Spark job; each lookup runs one") {
+  test("a serving bind and lookup of a bound generation run no Spark job") {
     val domain = "ext2.co.uk"
     val host = "www.sitea.com"
     val rankHost = strings(Pipeline.hostRanks(spark, store).get, "host").min
@@ -89,7 +79,7 @@ class ServingReadSpec extends SparkSpec {
     val (linkRows, linksQuery) = jobsDuring(links.query(LinkDbRequest(domain)))
     val (pageRows, pagesQuery) = jobsDuring(pages.query(PageDbRequest(host)))
     val (rank, ranksQuery) = jobsDuring(Pipeline.hostRankOf(spark, store, rankHost))
-    assert((linksQuery, pagesQuery, ranksQuery) == ((1, 1, 1)))
+    assert((linksQuery, pagesQuery, ranksQuery) == ((0, 0, 0)))
     assert(linkRows.nonEmpty && pageRows.nonEmpty && rank.nonEmpty)
   }
 
@@ -100,7 +90,7 @@ class ServingReadSpec extends SparkSpec {
     assert(before.map(_.qty) == Seq(1L))
     assert(jobsDuring(Pipeline.linkDb(spark, out, domain))._2 == 0)
     // a second segment holding the same links doubles every qty
-    val seg2 = Files.createTempDirectory("servingrefold2").resolve("part.wat.gz")
+    val seg2 = SparkSpec.tempDir("servingrefold2").resolve("part.wat.gz")
     Files.copy(Paths.get(Files.readString(manifest).trim), seg2)
     Files.writeString(manifest, Files.readString(manifest) + seg2 + "\n")
     Pipeline.importManifest(spark, manifest.toString, out)
@@ -133,7 +123,7 @@ class ServingReadSpec extends SparkSpec {
   }
 
   test("a legacy plain store (no _CURRENT) is still served") {
-    val root = Files.createTempDirectory("servinglegacy").toString + "/links"
+    val root = SparkSpec.tempDir("servinglegacy").toString + "/links"
     val compacted = operators.LinkCompaction.compact(Tables.links(spark, sfDir))
     LinkStore.write(compacted, root)
     assert(StoreGen.resolve(spark, root) == root)
@@ -207,5 +197,74 @@ class ServingReadSpec extends SparkSpec {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(gen))
     }
     for ((what, read) <- allReads(out)) assertStale(what)(read())
+  }
+
+  /** The serving lookups themselves — bind and query, as a request
+    * runs them — over each window in which the store moved.
+    */
+  private def assertLookupsStale(out: String): Unit = {
+    assertStale("links lookup")(
+      Pipeline.linkDb(spark, out, "ext2.co.uk").query(LinkDbRequest("ext2.co.uk")))
+    assertStale("pages lookup")(
+      Pipeline.pageDb(spark, out, "www.sitea.com").query(PageDbRequest("www.sitea.com")))
+    assertStale("ranks lookup")(Pipeline.hostRankOf(spark, out, "www.sitea.com"))
+  }
+
+  test("serving lookups fail as stale, never empty, in the swap, checksum and pruned windows") {
+    val (out, _) = foldedStore("servinglookups")
+    val f = new org.apache.hadoop.fs.Path(out)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val ptrs = Seq("links", "pages").map(s => Paths.get(out, s, "_CURRENT"))
+    val names = ptrs.map(Files.readString(_))
+    // bind once so the generation's schemas are memoized
+    assert(Pipeline.linkDb(spark, out, "ext2.co.uk").query(LinkDbRequest("ext2.co.uk")).nonEmpty)
+    assert(Pipeline.hostRankOf(spark, out, "www.sitea.com").nonEmpty)
+
+    // the swap window: the pointer deleted, its successor not yet there
+    ptrs.foreach(p => assert(f.delete(new org.apache.hadoop.fs.Path(p.toString), false)))
+    assertLookupsStale(out)
+    ptrs.zip(names).foreach { case (p, n) =>
+      val o = f.create(new org.apache.hadoop.fs.Path(p.toString), true)
+      try o.write(n.getBytes("UTF-8")) finally o.close()
+    }
+    assert(Pipeline.hostRankOf(spark, out, "www.sitea.com").nonEmpty)
+
+    // the checksum window: new pointer bytes under the old sidecar
+    ptrs.zip(names).foreach { case (p, n) =>
+      Files.writeString(p, n.map(c => if (c.isDigit) ('0' + (c - '0' + 1) % 10).toChar else c))
+    }
+    assertLookupsStale(out)
+    ptrs.zip(names).foreach { case (p, n) => Files.writeString(p, n) }
+    assert(Pipeline.hostRankOf(spark, out, "www.sitea.com").nonEmpty)
+
+    // a pruned generation, bound before it went and after
+    val bound = Pipeline.linkDb(spark, out, "ext2.co.uk")
+    Seq("links", "pages").foreach { s =>
+      SealedDir.deleteRecursively(Paths.get(StoreGen.resolve(spark, s"$out/$s")))
+    }
+    assertStale("links query of an earlier bind")(bound.query(LinkDbRequest("ext2.co.uk")))
+    assertLookupsStale(out)
+  }
+}
+
+
+object ServingReadSpec {
+
+  /** One folded store per test JVM for the specs that only read it. */
+  lazy val store: String = foldedStore(SparkSpec.session, "servingread")._1
+
+  /** links + pages + `_RANKS`: the WAT fixture imported and folded
+    * with rank maintenance, as the server sees a production store.
+    * Returns the store and its manifest.
+    */
+  def foldedStore(spark: org.apache.spark.sql.SparkSession,
+      prefix: String): (String, java.nio.file.Path) = {
+    val fixture = new WatSourceSpec {}.fixturePath
+    val out = SparkSpec.tempDir(prefix).toString
+    val manifest = SparkSpec.tempFile(prefix, ".paths")
+    Files.writeString(manifest, fixture + "\n")
+    Pipeline.importManifest(spark, manifest.toString, out)
+    Pipeline.foldSegments(spark, out, maintainRanks = true, rankTol = 1e-9)
+    (out, manifest)
   }
 }

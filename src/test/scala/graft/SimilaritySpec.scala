@@ -485,7 +485,7 @@ class SimilaritySpec extends SparkSpec {
     // r16 sf100 incident (recall 0.867 with no warning column)
     // replayed as a test: the leading indicator must LEAD.
     val dim = Tables.EmbeddingDim
-    val dir = java.nio.file.Files.createTempDirectory("graft-press").toFile.getAbsolutePath
+    val dir = SparkSpec.tempDir("graft-press").toFile.getAbsolutePath
     try {
       val hot = (col("vec_id") % 25 =!= 0) && col("vec_id").between(1000, 1187)
       spark.range(4000).select(col("id").as("vec_id"), lit("L0").as("label"))

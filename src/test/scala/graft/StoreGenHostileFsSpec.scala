@@ -17,7 +17,7 @@ class StoreGenHostileFsSpec extends SparkSpec {
 
   private lazy val root: String = {
     CopyRenameFileSystem.register(spark.sparkContext.hadoopConfiguration)
-    s"copydel://${Files.createTempDirectory("sg_hostile")}/store"
+    s"copydel://${SparkSpec.tempDir("sg_hostile")}/store"
   }
 
   private def writeNums(dir: String, ns: Seq[Int]): Unit = {
@@ -60,8 +60,8 @@ class StoreGenHostileFsSpec extends SparkSpec {
     // serving — with EVERY rename (Spark job commits, StoreGen's
     // pointer swap, lease tombstones) degraded to copy+delete
     val fixture = new WatSourceSpec {}.fixturePath
-    val out = s"copydel://${Files.createTempDirectory("pipe_hostile")}/store"
-    val manifest = Files.createTempFile("hostile", ".paths")
+    val out = s"copydel://${SparkSpec.tempDir("pipe_hostile")}/store"
+    val manifest = SparkSpec.tempFile("hostile", ".paths")
     Files.writeString(manifest, fixture + "\n")
     Pipeline.importManifest(spark, manifest.toString, out)
     val f1 = Pipeline.foldSegments(spark, out, maintainRanks = true, rankTol = 1e-9)
@@ -70,7 +70,7 @@ class StoreGenHostileFsSpec extends SparkSpec {
     val links1 = Pipeline.links(spark, out).count()
     assert(links1 > 0)
     // second delta: the same segment copied under a new id, re-fold
-    val seg2 = Files.createTempDirectory("hostile2").resolve("part.wat.gz")
+    val seg2 = SparkSpec.tempDir("hostile2").resolve("part.wat.gz")
     Files.copy(java.nio.file.Paths.get(fixture), seg2)
     Files.writeString(manifest, fixture + "\n" + seg2 + "\n")
     Pipeline.importManifest(spark, manifest.toString, out)

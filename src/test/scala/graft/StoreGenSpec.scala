@@ -15,14 +15,14 @@ class StoreGenSpec extends SparkSpec {
       .collect().map(_.getInt(0)).sorted.toSeq
 
   test("plain directories resolve to themselves") {
-    val root = Files.createTempDirectory("sg_plain").toString + "/store"
+    val root = SparkSpec.tempDir("sg_plain").toString + "/store"
     writeNums(root, Seq(1, 2, 3))
     assert(StoreGen.resolve(spark, root) == root)
     assert(readNums(root) == Seq(1, 2, 3))
   }
 
   test("publish migrates a legacy plain store and prunes its old files") {
-    val root = Files.createTempDirectory("sg_mig").toString + "/store"
+    val root = SparkSpec.tempDir("sg_mig").toString + "/store"
     writeNums(root, Seq(1, 2, 3)) // legacy layout: part files at root
     StoreGen.publish(spark, root, tmp => writeNums(tmp, Seq(4, 5)))
     assert(StoreGen.resolve(spark, root) != root, "pointer must exist now")
@@ -35,7 +35,7 @@ class StoreGenSpec extends SparkSpec {
   }
 
   test("commit keeps the previous generation and prunes older ones") {
-    val root = Files.createTempDirectory("sg_keep").toString + "/store"
+    val root = SparkSpec.tempDir("sg_keep").toString + "/store"
     StoreGen.publish(spark, root, tmp => writeNums(tmp, Seq(1)))
     // bind a reader to generation 1 BEFORE the next publishes
     val gen1Dir = StoreGen.resolve(spark, root)
@@ -52,7 +52,7 @@ class StoreGenSpec extends SparkSpec {
   }
 
   test("a crashed prepare leaves the live store untouched and is swept") {
-    val root = Files.createTempDirectory("sg_crash").toString + "/store"
+    val root = SparkSpec.tempDir("sg_crash").toString + "/store"
     StoreGen.publish(spark, root, tmp => writeNums(tmp, Seq(1)))
     // prepare writes gen-2 but "crashes" before commit
     val stray = StoreGen.prepare(spark, root, tmp => writeNums(tmp, Seq(99)))
@@ -66,7 +66,7 @@ class StoreGenSpec extends SparkSpec {
   }
 
   test("LinkStore read/readDomain resolve generations transparently") {
-    val root = Files.createTempDirectory("sg_links").toString + "/links"
+    val root = SparkSpec.tempDir("sg_links").toString + "/links"
     val links = operators.LinkCompaction.compact(Tables.links(spark, sfDir))
     StoreGen.publish(spark, root, tmp => LinkStore.write(links, tmp))
     assert(LinkStore.read(spark, root).count() == links.count())

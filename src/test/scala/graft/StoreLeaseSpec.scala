@@ -6,7 +6,7 @@ import java.nio.file.Files
 class StoreLeaseSpec extends SparkSpec {
 
   private def tmpRoot(name: String): String =
-    Files.createTempDirectory(name).resolve("links").toString
+    SparkSpec.tempDir(name).resolve("links").toString
 
   test("exclusive acquire: a live lease refuses a second writer, release frees it") {
     val root = tmpRoot("lease1")

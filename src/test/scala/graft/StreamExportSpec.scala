@@ -26,7 +26,7 @@ class StreamExportSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))
     val (b1, b2) = docs.partition(_._1 % 2 == 0)
 
-    val out = Files.createTempDirectory("sexport").toString + "/corpus"
+    val out = SparkSpec.tempDir("sexport").toString + "/corpus"
     val mem = MemoryStream[(Long, String, String)]
     val q = StreamOps.exportStream(
       mem.toDF().toDF("doc_id", "source", "text"), out, shards = 4)
@@ -55,7 +55,7 @@ class StreamExportSpec extends SparkSpec {
     def readStreamed() = spark.read.schema(schema).option("basePath", out)
       .json(s"$out/batch=*").withColumn("shard", col("shard").cast("long"))
     val streamed = readStreamed()
-    val oneShotDir = Files.createTempDirectory("oneshot").toString + "/corpus"
+    val oneShotDir = SparkSpec.tempDir("oneshot").toString + "/corpus"
     JsonlSink.write(
       Tables.table(spark, sfDir, "documents").select(col("doc_id"), col("source"), col("text")),
       oneShotDir, shards = 4)

@@ -6,9 +6,9 @@ class StreamImportSpec extends SparkSpec {
 
   test("streamImport ingests WAT files appearing in a watched directory") {
     val fixture = new WatSourceSpec {}.fixturePath
-    val watch = Files.createTempDirectory("watwatch")
-    val out = Files.createTempDirectory("streamstore").toString
-    val ckpt = Files.createTempDirectory("streamckpt").toString
+    val watch = SparkSpec.tempDir("watwatch")
+    val out = SparkSpec.tempDir("streamstore").toString
+    val ckpt = SparkSpec.tempDir("streamckpt").toString
     val q = Pipeline.streamImport(spark, watch.toString, out, ckpt)
     try {
       // drop a segment into the watched dir — note: a gz fixture works

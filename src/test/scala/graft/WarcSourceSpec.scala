@@ -71,7 +71,7 @@ class WarcSourceSpec extends SparkSpec {
     out.toByteArray
   }
 
-  private lazy val dir = Files.createTempDirectory("warc").toFile
+  private lazy val dir = SparkSpec.tempDir("warc").toFile
   private lazy val fileA: String = {
     val f = new java.io.File(dir, "crawl-00000.warc.gz")
     val s = new FileOutputStream(f)

@@ -24,7 +24,7 @@ class WatSourceSpec extends SparkSpec {
   }
 
   lazy val fixturePath: String = {
-    val dir = Files.createTempDirectory("wat").toFile
+    val dir = SparkSpec.tempDir("wat").toFile
     val f = new java.io.File(dir, "test.wat.gz")
     val w = new BufferedWriter(new OutputStreamWriter(
       new GZIPOutputStream(new FileOutputStream(f)), "UTF-8"))
