@@ -81,11 +81,11 @@ object BucketedTables {
     * iterative graph family (q51/q78/q79/q82/q52 and their verify
     * companions). Two r19 findings drive it (guide §2.4/§6):
     *   - a `localCheckpoint` edge pin reports UnknownPartitioning under
-    *     AQE (ProbeCkpt), so at any scale where the edge side is not
-    *     broadcast the per-iteration contribs join RE-SHUFFLES it —
-    *     ×10 iterations for PageRank, ×8 for HITS. Bucketed by the join
-    *     key, the edge side arrives exchange-free AND pre-sorted in
-    *     every iteration.
+    *     AQE (OPTIMIZATION_r19.md, change 1), so at any scale where
+    *     the edge side is not broadcast the per-iteration contribs join
+    *     RE-SHUFFLES it — ×10 iterations for PageRank, ×8 for HITS.
+    *     Bucketed by the join key, the edge side arrives exchange-free
+    *     AND pre-sorted in every iteration.
     *   - the edge DERIVATION (orders ⨝ customer + distinct over the
     *     full fact stream) was re-paid per graph query per run, while
     *     the distinct edge set itself changes only with the source

@@ -18,16 +18,19 @@ import org.apache.spark.sql.SparkSession
   *
   * Counts are pinned against a plain local-mode run of the SAME
   * queries in the same process (sequential sessions — one
-  * SparkContext at a time), so a divergence fails loudly. Run:
+  * SparkContext at a time), so a divergence fails loudly. Build the
+  * classes, then run:
   *
   * {{{
-  *   SPARK_SCALA_VERSION=2.13 sbt "runMain graft.ClusterRehearsal"
+  *   sbt compile
+  *   tools/run_main.sh graft.ClusterRehearsal
   * }}}
   *
-  * (forked JVM carries the full classpath; executors inherit it via
-  * extraClassPath. The env var is required: the worker's executor
-  * launcher probes SPARK_HOME's build layout without it and dies
-  * with "Cannot find any build directories".)
+  * (run_main.sh puts the absolute class directory on the classpath,
+  * which executors inherit via extraClassPath, hands them the same
+  * add-opens list, and exports SPARK_SCALA_VERSION: the worker's
+  * executor launcher probes SPARK_HOME's build layout without it and
+  * dies with "Cannot find any build directories".)
   */
 object ClusterRehearsal {
 
@@ -89,15 +92,7 @@ object ClusterRehearsal {
     withExec.getOrCreate()
   }
 
-  final case class EndpointStats(n: Int, p50Ms: Double, p99Ms: Double)
-
-  /** Nearest-rank percentile over millisecond latencies. */
-  private def percentile(sorted: IndexedSeq[Double], p: Double): Double =
-    if (sorted.isEmpty) -1.0
-    else sorted(math.max(0, math.min(sorted.size - 1, math.ceil(p * sorted.size).toInt - 1)))
-
-  private def runAll(master: String)
-      : (Map[String, Long], Map[String, String], Map[String, EndpointStats]) = {
+  private def runAll(master: String): (Map[String, Long], StoreAnswers) = {
     val spark = session(master)
     spark.sparkContext.setLogLevel("ERROR")
     try {
@@ -107,9 +102,7 @@ object ClusterRehearsal {
         println(f"[cluster-rehearsal] $master%-24s $name%-22s ${(System.nanoTime() - t0) / 1e9}%6.1fs rows=$n")
         name -> n
       }.toMap
-      val annStats = annRehearsal(spark, master)
-      val (responses, latencies) = servingRehearsal(spark, master)
-      (counts ++ annStats, responses, latencies)
+      (counts ++ annRehearsal(spark, master), storeRehearsal(spark, master))
     } finally spark.stop()
   }
 
@@ -171,164 +164,50 @@ object ClusterRehearsal {
     }
   }
 
-  // explicit timeouts: a request wedged in send() would otherwise keep
-  // a non-daemon hammer thread alive past its join and hang the JVM
-  // after main() returns
-  private val client = java.net.http.HttpClient.newBuilder()
-    .connectTimeout(java.time.Duration.ofSeconds(10)).build()
-
-  private val ReqTimeout = java.time.Duration.ofSeconds(30)
-
-  private def post(port: Int, path: String, body: String): (Int, String) = {
-    val resp = client.send(
-      java.net.http.HttpRequest
-        .newBuilder(java.net.URI.create(s"http://127.0.0.1:$port$path"))
-        .timeout(ReqTimeout)
-        .header("Content-Type", "application/json")
-        .POST(java.net.http.HttpRequest.BodyPublishers.ofString(body)).build(),
-      java.net.http.HttpResponse.BodyHandlers.ofString())
-    (resp.statusCode(), resp.body())
-  }
-
-  private def get(port: Int, path: String): (Int, String) = {
-    val resp = client.send(
-      java.net.http.HttpRequest
-        .newBuilder(java.net.URI.create(s"http://127.0.0.1:$port$path"))
-        .timeout(ReqTimeout).GET().build(),
-      java.net.http.HttpResponse.BodyHandlers.ofString())
-    (resp.statusCode(), resp.body())
-  }
-
-  private val LinksBody = """{"domain":"d3.com","limit":5,"sort":"linkUrl","order":"asc"}"""
-  private val RanksBody = """{"host":"h3.example.org"}"""
-
-  /** Serving-layer shakeout — the one surface the query sweep can't
-    * reach: [[Pipeline.publishRankedStore]] builds a real ranked store
-    * on THIS master's executors, [[Pipeline.serveLinkApi]] binds the
-    * HTTP surface to partition-pruned per-request reads, and a second
-    * publish swaps the live generation out from under 4 hammer threads
-    * mid-request (the rebind-retry window LinkApiSpec pins in local
-    * mode, here with the store read fanned across executor JVMs).
-    * Returns the canonical responses so [[main]] can assert PARITY
-    * across local[8] and local-cluster; the all-200 swap invariant is
-    * asserted here, inside each master's run.
+  /** What one master's published store answers: a sorted links window
+    * for one domain and one host's rank.
     */
-  private def servingRehearsal(spark: SparkSession, master: String)
-      : (Map[String, String], Map[String, EndpointStats]) = {
-    val out = java.nio.file.Files.createTempDirectory("graft-serve-rehearsal").toString
-    val links = Tables.links(spark, Sf)
-    // tol=0 never converges early: both masters run EXACTLY 8 rank
-    // iterations, so rank parity is a pure float-tolerance comparison
-    Pipeline.publishRankedStore(spark, links, out, rankTol = 0.0, rankMaxIters = 8)
-    // rate limit out of the way so every hammer request hits the store
-    val srv = Pipeline.serveLinkApi(spark, out, port = 0, rateLimitMax = Int.MaxValue)
+  private final case class StoreAnswers(links: Seq[api.LinkOut], rank: Option[Double])
+
+  private val LinksReq = api.LinkDbRequest("d3.com", sort = Some("linkUrl"), limit = 5)
+  private val RankHost = "h3.example.org"
+
+  /** Store leg: [[Pipeline.publishRankedStore]] compacts the links,
+    * writes the store and runs PageRank on THIS master's executors,
+    * then the serving reads ([[Pipeline.linkDb]], [[Pipeline.hostRankOf]])
+    * answer from the published generation. `rankTol = 0.0` never
+    * converges early, so both masters run EXACTLY 8 rank iterations
+    * and rank parity is a pure float-tolerance comparison.
+    */
+  private def storeRehearsal(spark: SparkSession, master: String): StoreAnswers = {
+    val out = java.nio.file.Files.createTempDirectory("graft-store-rehearsal")
     try {
-      val port = srv.boundPort
-      val health = get(port, "/api/health")
-      val linksResp = post(port, "/api/links", LinksBody)
-      val ranksResp = post(port, "/api/ranks", RanksBody)
-      require(health._1 == 200 && linksResp._1 == 200 && ranksResp._1 == 200,
-        s"serving bind failed: health=$health links=$linksResp ranks=$ranksResp")
-      // live-store-swap under load: two hammer threads per endpoint so
-      // BOTH serving routes cross the swap window, with per-request
-      // latency recorded — the p50/p99 evidence SERVING.json carries
-      val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val results = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int, Long)]()
-      val dropped = new java.util.concurrent.atomic.AtomicInteger(0)
-      val endpoints = Seq("/api/links" -> LinksBody, "/api/ranks" -> RanksBody)
-      val hammers = (0 until 4).map { h =>
-        val (path, body) = endpoints(h % endpoints.size)
-        new Thread(() => {
-          while (!stop.get()) {
-            val t0 = System.nanoTime()
-            // catch broadly so a throw can't silently kill the thread
-            // and degrade the 4-thread hammer to fewer — but only the
-            // SWAP failure mode (connection refused/reset = IOException)
-            // records the -1 sentinel that fails the all-200 assertion.
-            // A client-internal hiccup unrelated to the store swap is
-            // COUNTED (asserted ~zero below — a persistent non-IO
-            // failure must not become an invisible busy-loop
-            // contributing no samples) and backed off briefly.
-            try results.add((path, post(port, path, body)._1, System.nanoTime() - t0))
-            catch {
-              case _: InterruptedException => stop.set(true)
-              case _: java.io.IOException =>
-                results.add((path, -1, System.nanoTime() - t0))
-              case e: Exception =>
-                dropped.incrementAndGet()
-                System.err.println(s"[cluster-rehearsal] hammer dropped: $e")
-                Thread.sleep(100)
-            }
-          }
-        })
-      }
-      hammers.foreach { t => t.setDaemon(true); t.start() }
-      Pipeline.publishRankedStore(spark, links, out, rankTol = 0.0, rankMaxIters = 8)
-      stop.set(true)
-      hammers.foreach(_.join(60000))
-      val seen = results.toArray(Array.empty[(String, Int, Long)]).toSeq
-      val bad = seen.filterNot(_._2 == 200)
-      require(seen.size >= 20, s"want >=20 in-flight requests across the swap, got ${seen.size}")
-      require(bad.isEmpty, s"${bad.size} of ${seen.size} requests failed across the swap: ${bad.take(5)}")
-      require(dropped.get() == 0, s"${dropped.get()} hammer requests dropped on non-IO exceptions")
-      // the swapped-in generation was published from the same links
-      // frame — the served window must come back identical
-      val afterSwap = post(port, "/api/links", LinksBody)
-      require(afterSwap == linksResp,
-        s"post-swap response diverged: before=$linksResp after=$afterSwap")
-      val stats = seen.groupBy(_._1).map { case (path, rows) =>
-        val ms = rows.map(_._3 / 1e6).sorted.toIndexedSeq
-        path.stripPrefix("/api/") -> EndpointStats(ms.size,
-          math.rint(percentile(ms, 0.5) * 1000) / 1000,
-          math.rint(percentile(ms, 0.99) * 1000) / 1000)
-      }
-      println(s"[cluster-rehearsal] $master serving: ${seen.size} requests across live swap, all 200 — " +
-        stats.toSeq.sortBy(_._1).map { case (e, st) =>
-          s"$e n=${st.n} p50=${st.p50Ms}ms p99=${st.p99Ms}ms"
-        }.mkString("; "))
-      (Map(
-        "serve_health" -> s"${health._1}:${health._2}",
-        "serve_links" -> s"${linksResp._1}:${linksResp._2}",
-        "serve_ranks" -> s"${ranksResp._1}:${ranksResp._2}"), stats)
-    } finally srv.stop()
+      val t0 = System.nanoTime()
+      Pipeline.publishRankedStore(spark, Tables.links(spark, Sf), out.toString,
+        rankTol = 0.0, rankMaxIters = 8)
+      val answers = StoreAnswers(
+        Pipeline.linkDb(spark, out.toString, LinksReq.domain).query(LinksReq),
+        Pipeline.hostRankOf(spark, out.toString, RankHost))
+      require(answers.links.nonEmpty && answers.rank.isDefined,
+        s"store rehearsal premise: ${LinksReq.domain} has links and $RankHost a rank, got $answers")
+      println(f"[cluster-rehearsal] $master%-24s store (publish+links+rank) " +
+        f"${(System.nanoTime() - t0) / 1e9}%6.1fs links=${answers.links.size} " +
+        s"rank($RankHost)=${answers.rank.get}")
+      answers
+    } finally SealedDir.deleteRecursively(out)
   }
 
-  /** serve_ranks carries a float rank: 8 fixed iterations are the same
-    * arithmetic on both masters, but executor-count changes summation
-    * order — equal within 1e-9, not bit-equal. Everything else must
-    * match byte-for-byte.
+  /** The links window must match row for row. The rank is float
+    * arithmetic whose summation order follows the executor count:
+    * equal within 1e-9, not bit-equal.
     */
-  private def servingParity(a: Map[String, String], b: Map[String, String]): Seq[String] = {
-    val RankRe = """(\{"host":[^,]+,"rank":)(-?[\d.eE+-]+)(\})""".r
-    a.keySet.union(b.keySet).toSeq.sorted.flatMap { k =>
-      (a.get(k), b.get(k)) match {
-        case (Some(x), Some(y)) if k == "serve_ranks" =>
-          (RankRe.findFirstMatchIn(x), RankRe.findFirstMatchIn(y)) match {
-            case (Some(mx), Some(my))
-              if mx.group(1) == my.group(1) &&
-                math.abs(mx.group(2).toDouble - my.group(2).toDouble) < 1e-9 => None
-            case _ => Some(s"$k: local=$x cluster=$y")
-          }
-        case (Some(x), Some(y)) if x == y => None
-        case (x, y) => Some(s"$k: local=$x cluster=$y")
-      }
-    }
-  }
-
-  /** Per-master, per-endpoint p50/p99 across the live-swap window —
-    * the serving-latency evidence artifact (r10 verdict item 8).
-    */
-  private def writeServingJson(
-      byMaster: Seq[(String, Map[String, EndpointStats])]): Unit = {
-    val json = byMaster.map { case (master, stats) =>
-      val eps = stats.toSeq.sortBy(_._1).map { case (e, st) =>
-        s""""$e":{"n":${st.n},"p50_ms":${st.p50Ms},"p99_ms":${st.p99Ms}}"""
-      }.mkString(",")
-      s""""$master":{$eps}"""
-    }.mkString("{", ",", "}")
-    java.nio.file.Files.writeString(java.nio.file.Paths.get("SERVING.json"), json + "\n")
-    println(s"[cluster-rehearsal] serving latencies -> SERVING.json: $json")
-  }
+  private def storeParity(a: StoreAnswers, b: StoreAnswers): Seq[String] =
+    (if (a.links == b.links) Nil
+     else Seq(s"store links: local=${a.links} cluster=${b.links}")) ++
+      ((a.rank, b.rank) match {
+        case (Some(x), Some(y)) if math.abs(x - y) < 1e-9 => Nil
+        case (x, y) => Seq(s"store rank: local=$x cluster=$y")
+      })
 
   /** s09 at CLUSTER shape (r12 — the round-11 flagship's missing
     * evidence): the manifest-watching SegmentIngest stream driven on
@@ -415,120 +294,25 @@ object ClusterRehearsal {
       s"kill at $afterKill + restart → exactly-once, batch parity, replay no-op")
   }
 
-  /** Serving probe against a SCALE-FACTOR store (r12 — verdict item:
-    * p50/p99 existed only at rehearsal scale): publish the ranked
-    * store from the given corpus on the full box, then hammer both
-    * endpoints steady-state (no swap — the swap contract is the
-    * rehearsal's job) and MERGE the per-endpoint p50/p99 into
-    * SERVING.json under a `<sfDir>:<master>` key. Run:
-    * `sbt "runMain graft.ClusterRehearsal serve /tmp/graft_sf10"`.
-    */
-  private def scaleServe(sfDir: String): Unit = {
-    val master = s"local[${Runtime.getRuntime.availableProcessors}]"
-    val spark = session(master)
-    spark.sparkContext.setLogLevel("ERROR")
-    try {
-      val out = java.nio.file.Files.createTempDirectory("graft-serve-scale").toString
-      val t0 = System.nanoTime()
-      val iters = Pipeline.publishRankedStore(spark, Tables.links(spark, sfDir), out)
-      val publishS = math.rint((System.nanoTime() - t0) / 1e7) / 100
-      val srv = Pipeline.serveLinkApi(spark, out, port = 0, rateLimitMax = Int.MaxValue)
-      try {
-        val port = srv.boundPort
-        require(get(port, "/api/health")._1 == 200, "health failed")
-        val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
-        val results = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int, Long)]()
-        val dropped = new java.util.concurrent.atomic.AtomicInteger(0)
-        val endpoints = Seq("/api/links" -> LinksBody, "/api/ranks" -> RanksBody)
-        val hammers = (0 until 4).map { h =>
-          val (path, body) = endpoints(h % endpoints.size)
-          new Thread(() => {
-            while (!stop.get()) {
-              val t = System.nanoTime()
-              try results.add((path, post(port, path, body)._1, System.nanoTime() - t))
-              catch {
-                case _: InterruptedException => stop.set(true)
-                case _: java.io.IOException =>
-                  results.add((path, -1, System.nanoTime() - t))
-                case e: Exception =>
-                  dropped.incrementAndGet()
-                  System.err.println(s"[cluster-rehearsal] hammer dropped: $e")
-                  Thread.sleep(100)
-              }
-            }
-          })
-        }
-        hammers.foreach { t => t.setDaemon(true); t.start() }
-        Thread.sleep(20000)
-        stop.set(true)
-        hammers.foreach(_.join(60000))
-        val seen = results.toArray(Array.empty[(String, Int, Long)]).toSeq
-        val bad = seen.filterNot(_._2 == 200)
-        require(seen.size >= 40, s"want >=40 requests, got ${seen.size}")
-        require(bad.isEmpty, s"${bad.size} of ${seen.size} failed: ${bad.take(5)}")
-        require(dropped.get() == 0, s"${dropped.get()} hammer requests dropped on non-IO exceptions")
-        val stats = seen.groupBy(_._1).map { case (path, rows) =>
-          val ms = rows.map(_._3 / 1e6).sorted.toIndexedSeq
-          path.stripPrefix("/api/") -> EndpointStats(ms.size,
-            math.rint(percentile(ms, 0.5) * 1000) / 1000,
-            math.rint(percentile(ms, 0.99) * 1000) / 1000)
-        }
-        val eps = stats.toSeq.sortBy(_._1).map { case (e, st) =>
-          s""""$e":{"n":${st.n},"p50_ms":${st.p50Ms},"p99_ms":${st.p99Ms}}"""
-        }.mkString(",")
-        val entry = s""""$sfDir:$master":{$eps,"publish_s":$publishS,"rank_iters":$iters}"""
-        // merge into SERVING.json via a real parse/re-serialize so a
-        // re-run for the same <sfDir>:<master> REPLACES its stale
-        // entry instead of appending a duplicate key (consumers keep
-        // whichever duplicate their parser prefers; the file must not
-        // accrete dead entries across runs)
-        val p = java.nio.file.Paths.get("SERVING.json")
-        val merged = {
-          import org.json4s._
-          import org.json4s.jackson.JsonMethods
-          val cur: JObject =
-            if (java.nio.file.Files.exists(p))
-              JsonMethods.parse(java.nio.file.Files.readString(p)) match {
-                case o: JObject => o
-                case other => sys.error(s"unexpected SERVING.json shape: $other")
-              }
-            else JObject()
-          val add = JsonMethods.parse("{" + entry + "}").asInstanceOf[JObject]
-          val kept = cur.obj.filterNot { case (k, _) => k == s"$sfDir:$master" }
-          JsonMethods.compact(JObject(kept ++ add.obj))
-        }
-        java.nio.file.Files.writeString(p, merged + "\n")
-        println(s"[cluster-rehearsal] scale serve $sfDir on $master: ${seen.size} requests " +
-          s"all 200 — " + stats.toSeq.sortBy(_._1).map { case (e, st) =>
-            s"$e p50=${st.p50Ms}ms p99=${st.p99Ms}ms" }.mkString("; ") +
-          s" (publish ${publishS}s, $iters rank iters)")
-      } finally srv.stop()
-    } finally spark.stop()
-  }
-
   def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("serve")) {
-      scaleServe(args.lift(1).getOrElse("/tmp/graft_sf10"))
-      return
-    }
-    val (local, localServe, localLat) = runAll("local[8]")
-    val (cluster, clusterServe, clusterLat) = runAll("local-cluster[2,4,2048]")
+    val (local, localStore) = runAll("local[8]")
+    val (cluster, clusterStore) = runAll("local-cluster[2,4,2048]")
     locally {
       val s = session("local-cluster[2,4,2048]")
       s.sparkContext.setLogLevel("ERROR")
       try ingestRehearsal(s, "local-cluster[2,4,2048]") finally s.stop()
     }
-    writeServingJson(Seq("local[8]" -> localLat, "local-cluster[2,4,2048]" -> clusterLat))
     val diverged = (queries.map(_._1) ++ AnnStatKeys)
       .filter(n => local(n) != cluster(n))
       .map(n => s"$n: local=${local(n)} cluster=${cluster(n)}") ++
-      servingParity(localServe, clusterServe)
+      storeParity(localStore, clusterStore)
     if (diverged.nonEmpty) {
       diverged.foreach(n => System.err.println(
         s"[cluster-rehearsal] DIVERGED $n"))
       sys.exit(1)
     }
-    println(s"[cluster-rehearsal] OK: ${queries.size} queries + serving surface " +
-      "(health/links/ranks + live-swap) identical across local[8] and local-cluster[2,4,2048]")
+    println(s"[cluster-rehearsal] OK: ${queries.size} queries + ANN index + published store " +
+      "(links window, host rank) identical across local[8] and local-cluster[2,4,2048]; " +
+      "ingest exactly-once on local-cluster[2,4,2048]")
   }
 }

@@ -244,7 +244,7 @@ object GraftConf {
       // a streaming SortAggregate beats building a per-task hash map
       // over millions of groups — the rule ONLY fires on satisfied
       // ordering, so unsorted inputs keep hash aggregation (r17:
-      // ProbeQ02 measured the old q02 cascade 2.5 → 2.0s from this
+      // TRIALS_r17.json measured the old q02 cascade 2.5 → 2.0s from this
       // flag alone; it is the other half of the bucketed-sort trust
       // the outputOrdering conf above establishes)
       .config("spark.sql.execution.replaceHashWithSortAgg", "true")

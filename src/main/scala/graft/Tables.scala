@@ -21,7 +21,7 @@ object Tables {
   val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
 
   /** Schema memo for the immutable base tables, keyed by file path.
-    * r19 (guide §1 measurement, ProbeRead): a bare
+    * r19 (OPTIMIZATION_r19.md, change 2): a bare
     * `spark.read.parquet` pays eager footer schema-INFERENCE on every
     * call — ~72 ms/table at sf0.1, and every registered query pays it
     * for 1-3 tables in each bench pass. Supplying the schema skips
@@ -185,10 +185,11 @@ object Tables {
   }
 
   /** Read a just-dumped directory back with the WRITTEN frame's own
-    * schema. r19 (ProbeRead): a bare read pays ~70 ms of footer schema
-    * inference per call; the write just fixed the schema, so supplying
-    * it is free and involves no caching at all. The parquet scan still
-    * reads the actual files — only the redundant inference is skipped.
+    * schema. r19 (plans/r19/schema_inference_probe.txt): a bare read
+    * pays ~70 ms of footer schema inference per call; the write just
+    * fixed the schema, so supplying it is free and involves no caching
+    * at all. The parquet scan still reads the actual files — only the
+    * redundant inference is skipped.
     */
   def readBack(df: DataFrame, path: String): DataFrame =
     df.sparkSession.read.schema(df.schema).parquet(path)

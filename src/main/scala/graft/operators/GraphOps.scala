@@ -35,7 +35,7 @@ object GraphOps {
     *     `dst` (HITS' hub step); a bucketed scan supplies that
     *     distribution exchange-free and pre-sorted at ANY scale,
     *     whereas the old `localCheckpoint` pin reports
-    *     UnknownPartitioning under AQE (r19 ProbeCkpt) and re-shuffles
+    *     UnknownPartitioning under AQE (r19, OPTIMIZATION_r19.md) and re-shuffles
     *     per iteration wherever the edge side is too big to broadcast;
     *   - the links ⨝ customer + distinct derivation — the only
     *     corpus-wide work in these queries — moves to the layout build
@@ -144,7 +144,7 @@ object GraphOps {
   /** `pinEdges = false` (r20) is for edge frames that are CHEAP TO
     * RE-SCAN and already carry the join distribution — the bucketed
     * host_edges layout: a checkpoint pin would trade the bucket
-    * partitioning (exchange-free in-loop joins, r19 ProbeCkpt:
+    * partitioning (exchange-free in-loop joins, OPTIMIZATION_r19.md:
     * checkpoint leaves report UnknownPartitioning) for an in-memory
     * copy the loop re-shuffles every iteration at cluster scale.
     * Derived/store edge frames keep the default pin so the derivation
@@ -157,7 +157,7 @@ object GraphOps {
       init: Option[org.apache.spark.sql.DataFrame] = None,
       pinEdges: Boolean = true)
       : (org.apache.spark.sql.DataFrame, Int) = {
-    // r19: NO repartition(src) before the pin — measured (ProbeCkpt):
+    // r19: NO repartition(src) before the pin — measured (OPTIMIZATION_r19.md):
     // a localCheckpoint leaf under AQE reports UnknownPartitioning, so
     // the in-loop join never reused that exchange; it was a pure setup
     // cost. (r20: real exchange reuse comes from the bucketed edge
@@ -194,7 +194,7 @@ object GraphOps {
     // per-iteration BroadcastExchange subtree at all. Fixed-iters mode
     // has no action to ride and keeps the in-plan broadcast: a
     // DEDICATED scalar action per iteration was built and measured
-    // SLOWER (ProbeIter: q51 2.6→3.1s — the sync head() costs more
+    // SLOWER (OPTIMIZATION_r19.md: q51 2.6→3.1s — the sync head() costs more
     // than the exchange it replaces; AQE overlaps in-plan stages).
     var dmassScalar: Option[Double] =
       if (tol.isDefined) Some(ranks.agg(dmCol).head().getDouble(0)) else None
@@ -397,7 +397,7 @@ object GraphOps {
       // r20: the bucketed layout replaces the r19 checkpoint pin — the
       // derivation it deduplicated now lives in the layout build, and
       // an unpinned scan keeps the bucket distribution both phases'
-      // in-loop joins key on (a checkpoint leaf loses it, ProbeCkpt)
+      // in-loop joins key on (a checkpoint leaf loses it, OPTIMIZATION_r19.md)
       val all = edges(s, dir)
       val (prev, prevIters) = pageRankOnEdges(all.filter(!edgeIsNew),
         maxIters = RankDeltaMaxIters, tol = Some(RankDeltaTol), pinEdges = false)
@@ -533,7 +533,7 @@ object GraphOps {
     * Scale shape mirrors [[pageRankOnEdges]]: the edge list is pinned
     * ONCE (r19 — the former src-/dst-partitioned twin pins assumed a
     * checkpoint leaf keeps its hash partitioning for the two join
-    * directions; ProbeCkpt measured that false under AQE, so the
+    * directions; OPTIMIZATION_r19.md records that false under AQE, so the
     * second pin was a pure extra exchange+copy), the per-iteration
     * score frames are one row per host, and lineage truncates per
     * iteration via lazy checkpoints. Two deliberate differences
@@ -555,7 +555,7 @@ object GraphOps {
       iters: Int = HitsIters): org.apache.spark.sql.DataFrame = {
     // r19: ONE pinned edge copy. The old src- and dst-partitioned twin
     // pins assumed the checkpoint leaf keeps its hash partitioning for
-    // the two join directions — measured false under AQE (ProbeCkpt:
+    // the two join directions — measured false under AQE (OPTIMIZATION_r19.md:
     // LogicalRDD reports UnknownPartitioning), so the second pin was a
     // full extra exchange + copy buying nothing.
     val e = edgeFrame.localCheckpoint(false)
@@ -600,7 +600,7 @@ object GraphOps {
     // ONE normalization + host-set completion pass; greatest() guards
     // the all-zero degenerate graph (0/0 → NaN). In-plan broadcasts,
     // not driver-side scalar actions — the scalar spelling was built
-    // and measured slower (ProbeIter; same finding as the pagerank
+    // and measured slower (OPTIMIZATION_r19.md; same finding as the pagerank
     // dangling mass: a sync head() costs more than the exchange)
     def normScalar(f: org.apache.spark.sql.DataFrame) = f.agg(
       greatest(sqrt(sum(col("score") * col("score"))), lit(1e-12)).as("nrm"))

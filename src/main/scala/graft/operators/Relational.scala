@@ -65,7 +65,7 @@ object Relational {
       val c = Tables.table(s, dir, "customer")
       val n = Tables.table(s, dir, "nation")
       val r = Tables.table(s, dir, "region")
-      // r17 respelling (ProbeQ02-adjudicated, 2.6 → ~1.5s at sf10 —
+      // r17 respelling (TRIALS_r17.json: 2.6 → ~1.5s at sf10 —
       // DuckDB-parity): the whole dim side of the join tree broadcasts,
       // so NOTHING wide ever shuffles. lineitem ⋈ orders is the
       // bucket-colocated sort-merge (zero exchange — BucketedTables),
@@ -78,7 +78,7 @@ object Relational {
       // per-orderkey cascade is retired here: it shrank a join stream
       // that no longer needs shrinking (the SMJ streams sorted
       // buckets), and its 15M-group aggregate cost more than the 4×
-      // join traffic it saved (ProbeQ02: cascade 2.0-2.6s, this 1.5s).
+      // join traffic it saved (TRIALS_r17.json: cascade 2.0-2.6s, this 1.5s).
       // rev_part is the ingest-materialized decimal (BucketedTables):
       // same HALF_UP value as the inline cast, minus the per-row
       // Double.toString parse the cast pays. Exact by associativity:

@@ -149,7 +149,7 @@ object SimilarityOps {
   }
 
   /** COUNT-SKETCH SCREEN (r16): the banded candidate mass sits at
-    * J 0.5-0.7 (ProbeQ30b: 93% of sf1's 707k candidates; 142:1
+    * J 0.5-0.7 (SURVEY.md §7 R16a: 93% of sf1's 707k candidates; 142:1
     * candidate:pair at sf100) and each survivor ships text + pays a
     * per-pair shingle recompute in the verify stage. The 132-byte
     * jaccard_sketch upper-bounds |A ∩ B| per pair (per-bucket min
@@ -725,7 +725,7 @@ object SimilarityOps {
     * hit the exact answer before a cheaper fraction is accepted — an
     * ~8-point margin over the gate's 0.9 so a different query draw
     * cannot straddle the gate. On the isotropic testdata the curve
-    * reads 0.84 at 1/4 (ProbeAnn), so every rung fails and the law
+    * reads 0.84 at 1/4 (TRIALS_r18.json), so every rung fails and the law
     * stays 1/2; on the clustered control the first rung passes.
     */
   private val CalibBar = 0.98
@@ -1016,20 +1016,10 @@ object SimilarityOps {
   : org.apache.spark.sql.DataFrame =
     lshPairsFromBuckets(lshBucketAgg(s, dir))
 
-  // dev-probe handles (tools.ProbeQ83) — not part of the query surface
-  private[graft] def probeLshBucketAgg(s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = lshBucketAgg(s, dir)
-  private[graft] def probeLshPairs(b: org.apache.spark.sql.DataFrame)
-  : org.apache.spark.sql.DataFrame = lshPairsFromBuckets(b)
-  private[graft] def probeLshPressure(b: org.apache.spark.sql.DataFrame)
-  : org.apache.spark.sql.DataFrame = lshPressure(b)
-
-  // dev-probe handles (tools.ProbeAnn) — fine-IVF recall/cost curves
+  // fit and candidate handles for AnnIndexStoreSpec and the
+  // ClusterRehearsal ANN leg — not part of the query surface
   private[graft] def probeIvfFit(s: org.apache.spark.sql.SparkSession,
       dir: String): IvfIndex = ivfFitFor(s, dir)
-  private[graft] def probeTopK(e: org.apache.spark.sql.DataFrame,
-      cand: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    quantizedTopK(e, cand)
   /** q40's candidate frame with an EXPLICIT probe count (recall-curve
     * sweeps); `probes <= 0` means the production law.
     */
@@ -1369,12 +1359,6 @@ object SimilarityOps {
     IvfIndex(cents, cents.map(c => math.sqrt(c.map(x => x * x).sum)))
   }
 
-  /** Corpus-scaled ANN index fit over a frame (specs): cells from the
-    * frame's own count. Production paths use the dir-memoized count.
-    */
-  private[graft] def fitIvf(e: org.apache.spark.sql.DataFrame): IvfIndex =
-    fitIvfK(embSample(e), ivfCellsFor(e.count()))
-
   /** SemDeDup cluster count: |cluster| ≈ 512 keeps the within-cluster
     * quadratic FLAT as the corpus grows (the Abbas et al. k ∝ n
     * posture — a fixed 16 cells would make clusters n/16 and the pair
@@ -1441,7 +1425,7 @@ object SimilarityOps {
     * exploded frame is ~1024 instead of ~512, so pair mass ≈ 4× the
     * single-probe bill instead of ≈ 2× — still linear in n, paid only
     * past the ~262k-vector engagement threshold. Measured on the
-    * planted cos≈1 pattern at sf100 (ProbeSem, TRIALS_r18):
+    * planted cos≈1 pattern at sf100 (TRIALS_r18.json):
     * single-probe assignment agreement is already 99.7% — the r17
     * "43% recall" note traced to a denominator artifact, not
     * assignment loss — and multi-probe lifts shared-cluster coverage
@@ -1485,8 +1469,8 @@ object SimilarityOps {
   }
 
   /** Fine-regime probe count, with the probe-fraction math re-derived
-    * against measurement (ProbeAnn at sf100, n=2M, 4030 fine cells —
-    * TRIALS_r18):
+    * against measurement (sf100, n=2M, 4030 fine cells —
+    * TRIALS_r18.json):
     *
     *   - candidate mass is now EXACTLY proportional to probes
     *     (152k/310k/622k/1.25M/2.5M/5.0M candidates per query at
@@ -1648,7 +1632,7 @@ object SimilarityOps {
   )
 
   /** The q41 core over any (link_domain, link_text) frame — also driven
-    * at 10x domain count by graft.ScaleRehearsal.
+    * at 10x domain count in the r7 scale rehearsal (SURVEY.md §5).
     */
   private[graft] def sketchPairs(links: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     // sketches feed the band explode AND both pair sides: materialize
@@ -1663,7 +1647,7 @@ object SimilarityOps {
     // it would take TWO colliding domains in one band bucket to emit a
     // wrong pair) is the same modeled risk every hash-keyed family
     // member documents.
-    // distinct-first (r17, ProbeQ41): MinHash is SET semantics — min
+    // distinct-first (r17, TRIALS_r17.json): MinHash is SET semantics — min
     // over duplicate elements is idempotent — so the aggregate runs
     // over DISTINCT (domain, text) pairs (exactly the oracle's
     // spelling) and the per-element md5 + 48 Carter-Wegman perms run
@@ -2094,7 +2078,7 @@ object SimilarityOps {
     * of q73; the plan is unchanged). The verify companion dumps this
     * frame's id pairs for its oracle.
     */
-  private[graft] def pqShortlist(s: org.apache.spark.sql.SparkSession, dir: String)
+  private def pqShortlist(s: org.apache.spark.sql.SparkSession, dir: String)
   : org.apache.spark.sql.DataFrame = {
     val e = Tables.embeddings(s, dir)
     // dir-memoized fits: q73/q83 share the sample, IVF and PQ fits
@@ -2238,14 +2222,14 @@ object SimilarityOps {
         // the LSH bucket frame is shared by the pairs dump AND the
         // cap-pressure dump. r17 PERSISTED it and materialized the
         // cache via the pressure rollup BEFORE forking, claiming "wall
-        // unchanged vs r16" — ProbeQ83 (TRIALS_r18) measured that
+        // unchanged vs r16" — TRIALS_r18.json measured that
         // claim false and attributed the r17 verdict's +1.9-2.9s
         // every-SF regression: at sf0.1 the persist-materialize costs
         // ~1.2s where the plain fold costs ~0.3s (cache serialization
         // of the ids arrays), reading pairs back from the cache is
         // SLOWER than re-running the codegen'd fold (~0.75s vs
         // ~0.45s), and the whole prefix sat sequentially ahead of the
-        // concurrent region. Measured end-to-end (TimeOne, warm): the
+        // concurrent region. Measured end-to-end (TRIALS_r18.json, warm): the
         // no-persist respelling reads 2.5-3.4s vs 4.4s at sf0.1 and
         // 9.6-10s vs 13-14s at sf10 — so the DEFAULT is now to fold
         // twice (pressure job + pairs job, chained in one future that
@@ -2263,7 +2247,8 @@ object SimilarityOps {
         // frame CONSTRUCTION stays inside the futures (r19: hoisting it
         // to this thread serialized the IVF probe-calibration jobs that
         // ivfCandidates' first build runs ahead of the whole concurrent
-        // region — TimeOne sf10 read ~+1.5s for it); the typed futures
+        // region — a sf10 solo control read ~+1.5s for it,
+        // OPTIMIZATION_r19.md); the typed futures
         // hand the dumped frames back out so the gate's read-backs can
         // reuse their schemas (Tables.readBack)
         def dumped(mk: => org.apache.spark.sql.DataFrame, path: String)

@@ -342,7 +342,7 @@ object TextOps {
     * length class quadratically, and those rows existed only to be
     * dropped by the intersection AFTER riding the pair exchange (the
     * e^{-2·load} bucket-coincidence rate is inherent to a minimal-k
-    * pigeonhole, not tunable). The r16 A/B (ProbeQ29d, sf10) showed
+    * pigeonhole, not tunable). The r16 A/B (sf10, SURVEY.md §7 R16a) showed
     * the intersection buys only ~23% fewer verified candidates once
     * the positional screen is in place (2.59M screened prefix pairs →
     * 2.01M intersected, 20.9k true) — while paying for a second keyed
@@ -382,7 +382,7 @@ object TextOps {
     * rides as long): 9·(|A|+|B|) on a ~2²⁸-shingle doc must widen,
     * not wrap Int and wrongly drop a qualifying pair.
     */
-  private[graft] def blockedCandidatePairs(docs: org.apache.spark.sql.DataFrame)
+  private def blockedCandidatePairs(docs: org.apache.spark.sql.DataFrame)
   : org.apache.spark.sql.DataFrame = {
     val k1 = prefixKeys(docs)
     val emitOk =
@@ -393,7 +393,7 @@ object TextOps {
     // saturates — at the 1000× point every length class holds ~10⁴
     // docs and two RANDOM same-length docs share a "rare" prefix token
     // with probability ~(|prefix|²/|tokens|) ≈ 4%, so screened-but-
-    // false emissions went quadratic: ProbeQ29e measured 2.6M distinct
+    // false emissions went quadratic: SURVEY.md §7 R16a records 2.6M distinct
     // candidates at sf10 but 1.09 BILLION at sf100 (×419 for ×10 data
     // — the regime change sf10 benchmarking cannot see). The 36-byte
     // k=64 jaccard mini-sketch rides each key row and the join filter
@@ -419,19 +419,6 @@ object TextOps {
       .select(col("a_id"), col("b_id"))
       .distinct()
   }
-
-  // dev-probe hooks for graft.tools.ProbeQ29 (cost decomposition)
-  private[graft] def probeShingled(s: org.apache.spark.sql.SparkSession, dir: String) =
-    nearDupDocs(s, dir)
-  private[graft] def probeKeyed(docs: org.apache.spark.sql.DataFrame) =
-    prefixKeys(docs)
-  private[graft] def probeCand(docs: org.apache.spark.sql.DataFrame) =
-    blockedCandidatePairs(docs)
-  private[graft] def probeCommonTokens(docs: org.apache.spark.sql.DataFrame) =
-    fitCommonTokens(docs)
-  private[graft] def probeVerify(docs: org.apache.spark.sql.DataFrame,
-      cand: org.apache.spark.sql.DataFrame) =
-    verifyJaccardPairs(docs, cand)
 
   /** Character 3-gram Jaccard near-dup detection at the EXACT ≥ 0.8
     * threshold, with a deterministic two-level block: exact text length
@@ -489,7 +476,7 @@ object TextOps {
     * The PAIR SOURCE is a parameter: q36 feeds it q29's length-blocked
     * pairs (oracle-matchable in SQL), while the scale path feeds it
     * q30's LSH pairs — bucketed candidate generation with no quadratic
-    * length-block, rehearsed at 10× in ScaleRehearsal. The propagation
+    * length-block, rehearsed at 10× (SURVEY.md §5). The propagation
     * loop itself is pair-source-agnostic.
     */
   private[graft] def clusterPairs(pairs: org.apache.spark.sql.DataFrame)

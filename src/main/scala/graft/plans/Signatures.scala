@@ -49,7 +49,8 @@ object Signatures {
   /** One XXH64 per 3-byte shingle position, then k running minima of
     * (a_i*h32+b_i) mod p — computed once per DISTINCT shingle hash:
     * duplicates produce identical permuted values, so min-ing them
-    * again is pure waste, and ProbeQ30c pinned the signature stage as
+    * again is pure waste, and the r17 sf100 decomposition (SURVEY.md
+    * §7, R18 roadmap item 2) pinned the signature stage as
     * q30's entire sf100 bill on corpora whose template text repeats
     * trigrams heavily (r16: ~19.7k distinct in the whole token space).
     * Collect-sort-unique over the position hashes costs O(len·log len)
@@ -610,8 +611,7 @@ object SortedIntersectCount {
   * itself) would otherwise ride the pair exchange, and a candidate
   * culled here skips the verify stage's per-pair shingle recompute
   * entirely (q30's sf100 bill: ~320 s verifying 67.8 M banded
-  * candidates of which ~99% sit at J 0.5-0.7 — measured by
-  * ProbeQ30b).
+  * candidates of which ~99% sit at J 0.5-0.7 — SURVEY.md §7, R16a).
   */
 case class JaccardSketchExpr(child: Expression, k: Int) extends UnaryExpression {
 

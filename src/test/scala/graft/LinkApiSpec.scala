@@ -394,8 +394,9 @@ class LinkApiSpec extends SparkSpec {
       val bad = seen.map(_._1).filterNot(_ == 200)
       assert(bad.isEmpty,
         s"${bad.size} of ${seen.size} requests failed across swaps: ${bad.take(5)}")
-      // latency REGRESSION gate across the swap window (the
-      // ClusterRehearsal SERVING.json evidence, asserted in-suite):
+      // latency REGRESSION gate across the swap window (perfbench's
+      // serve_rps and traced api.*_query_ms measure steady-state
+      // serving; this bounds the swap window in-suite):
       // per-request work is one partition-pruned read of a tiny store,
       // so even with rebind-and-retry mid-swap the tail must stay in
       // request-serving territory — a full-store scan creeping into
@@ -410,6 +411,57 @@ class LinkApiSpec extends SparkSpec {
       info(f"swap-window latency over ${ms.size} requests: p50=$p50%.1fms p99=$p99%.1fms")
       assert(p50 < 2000, f"p50 across swaps regressed: $p50%.1fms")
       assert(p99 < 10000, f"p99 across swaps regressed: $p99%.1fms")
+    } finally srv.stop()
+  }
+
+  test("links and ranks requests across a ranked-store republish all answer 200 with the same links window") {
+    // the production binding over a ranked store, both serving routes
+    // hammered while publishRankedStore swaps in a second generation
+    // built from the same links frame. Unlike the swap tests above, a
+    // request that fails on the client side (a dropped connection is an
+    // IOException) counts as a failure, not a skipped sample.
+    val out = SparkSpec.tempDir("rankswap").toString
+    val links = Tables.links(spark, sfDir)
+    Pipeline.publishRankedStore(spark, links, out, rankTol = 0.0, rankMaxIters = 8)
+    val srv = Pipeline.serveLinkApi(spark, out, port = 0, rateLimitMax = Int.MaxValue)
+    try {
+      val port = srv.boundPort
+      val linksBody = """{"domain":"d3.com","limit":5,"sort":"linkUrl","order":"asc"}"""
+      val ranksBody = """{"host":"h3.example.org"}"""
+      val before = postTo(port, "/api/links", linksBody)
+      assert(before.statusCode() == 200 && before.body().startsWith("[{"),
+        s"links before the swap: ${before.statusCode()} ${before.body()}")
+      assert(postTo(port, "/api/ranks", ranksBody).statusCode() == 200)
+      val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val results = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+      val routes = Seq("/api/links" -> linksBody, "/api/ranks" -> ranksBody)
+      val hammers = (0 until 4).map { h =>
+        val (route, body) = routes(h % routes.size)
+        new Thread(() => {
+          while (!stop.get()) {
+            val outcome =
+              try postTo(port, route, body).statusCode().toString
+              catch { case e: Exception => e.toString }
+            results.add(route -> outcome)
+          }
+        })
+      }
+      hammers.foreach(_.start())
+      Pipeline.publishRankedStore(spark, links, out, rankTol = 0.0, rankMaxIters = 8)
+      stop.set(true)
+      hammers.foreach(_.join(30000))
+      val seen = results.toArray(Array.empty[(String, String)]).toSeq
+      info(s"${seen.size} requests across the republish")
+      routes.foreach { case (route, _) =>
+        val n = seen.count(_._1 == route)
+        assert(n >= 10, s"want >=10 $route requests across the swap, got $n")
+      }
+      val bad = seen.filterNot(_._2 == "200")
+      assert(bad.isEmpty,
+        s"${bad.size} of ${seen.size} requests failed across the swap: ${bad.take(5)}")
+      val after = postTo(port, "/api/links", linksBody)
+      assert(after.statusCode() == 200 && after.body() == before.body(),
+        s"links window changed across the swap: before=${before.body()} after=${after.body()}")
     } finally srv.stop()
   }
 
