@@ -224,74 +224,77 @@ object ClusterRehearsal {
     val (seg, pages, links, frags) = (24, 60, 5, 6)
     val fixture = sources.ManifestFixture.scaledDir(seg, pages, links, frags)
     val watch = java.nio.file.Files.createTempDirectory("graft-ingest-watch")
-    val out = java.nio.file.Files.createTempDirectory("graft-ingest-cluster").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ingest-ckpt").toString
-    def landFragment(i: Int): Unit = {
-      val name = f"frag$i%02d.paths"
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(fixture, "fragments", name), watch.resolve(name))
-    }
-    def completed: Seq[String] =
-      sources.SegmentManifest.completedSegments(spark, out)
-    def waitFor(cond: => Boolean, what: String, timeoutMs: Long = 300000): Unit = {
-      val t0 = System.nanoTime()
-      while (!cond) {
-        require((System.nanoTime() - t0) / 1e6 < timeoutMs,
-          s"ingest rehearsal timed out waiting for $what")
-        Thread.sleep(250)
-      }
-    }
-    // phase 1: half the fragments are already published when the
-    // watcher starts (the importer-joins-a-running-crawl shape)
-    (0 until frags / 2).foreach(landFragment)
-    val q1 = graft.streaming.SegmentIngest.start(
-      spark, watch.toString, out, ckpt, availableNow = false)
+    val outDir = java.nio.file.Files.createTempDirectory("graft-ingest-cluster")
+    val ckptDir = java.nio.file.Files.createTempDirectory("graft-ingest-ckpt")
+    val batchDir = java.nio.file.Files.createTempDirectory("graft-ingest-batch")
+    val (out, ckpt, batchOut) = (outDir.toString, ckptDir.toString, batchDir.toString)
     try {
-      waitFor(completed.size >= seg / 4, s"first ${seg / 4} segments")
-      // phase 2: the remaining fragments land while imports run…
-      (frags / 2 until frags).foreach(landFragment)
-      // …and the stream is KILLED with imports in flight (stop() as
-      // soon as the next marker appears — segments beyond it are
-      // mid-batch or undelivered)
-      waitFor(completed.size >= seg / 2, s"${seg / 2} segments before the kill")
-    } finally q1.stop()
-    q1.awaitTermination()
-    val afterKill = completed.size
-    println(s"[cluster-rehearsal] $master ingest: killed stream at " +
-      s"$afterKill/$seg segments imported")
-    // restart from the SAME checkpoint: offsets skip consumed
-    // fragments, markers skip completed segments, the drain finishes
-    // everything else exactly once
-    graft.streaming.SegmentIngest.start(
-      spark, watch.toString, out, ckpt, availableNow = true).awaitTermination()
-    val ids = completed.sorted
-    require(ids.size == seg,
-      s"restarted drain left ${seg - ids.size} of $seg segments unimported")
-    // parity: a fresh batch importManifest of the same manifest must
-    // produce row-identical per-segment stores
-    val batchOut = java.nio.file.Files.createTempDirectory("graft-ingest-batch").toString
-    val stats = Pipeline.importManifest(spark, s"$fixture/manifest/wat.paths", batchOut)
-    require(stats.imported.size == seg && stats.remaining.isEmpty,
-      s"batch parity import incomplete: $stats")
-    def segRows(store: String, id: String): Seq[String] =
-      graft.sinks.LinkStore.read(spark,
-          s"${sources.SegmentManifest.segmentDir(store, id)}/links")
-        .drop("domain_bucket").collect().map(_.toString).sorted.toSeq
-    ids.foreach { id =>
-      require(segRows(out, id) == segRows(batchOut, id),
-        s"segment $id: stream-ingested store diverged from batch import")
-    }
-    // idempotence: a caught-up replay must rewrite nothing
-    def markerStamps: Map[String, Long] = ids.map { id =>
-      id -> new java.io.File(sources.SegmentManifest.segmentDir(out, id),
-        sources.SegmentManifest.Marker).lastModified()
-    }.toMap
-    val stamps = markerStamps
-    graft.streaming.SegmentIngest.start(
-      spark, watch.toString, out, ckpt, availableNow = true).awaitTermination()
-    require(markerStamps == stamps, "caught-up replay rewrote a marker")
-    println(s"[cluster-rehearsal] $master ingest: $seg segments (${pages}p×${links}l), " +
-      s"kill at $afterKill + restart → exactly-once, batch parity, replay no-op")
+      def landFragment(i: Int): Unit = {
+        val name = f"frag$i%02d.paths"
+        java.nio.file.Files.copy(
+          java.nio.file.Paths.get(fixture, "fragments", name), watch.resolve(name))
+      }
+      def completed: Seq[String] =
+        sources.SegmentManifest.completedSegments(spark, out)
+      def waitFor(cond: => Boolean, what: String, timeoutMs: Long = 300000): Unit = {
+        val t0 = System.nanoTime()
+        while (!cond) {
+          require((System.nanoTime() - t0) / 1e6 < timeoutMs,
+            s"ingest rehearsal timed out waiting for $what")
+          Thread.sleep(250)
+        }
+      }
+      // phase 1: half the fragments are already published when the
+      // watcher starts (the importer-joins-a-running-crawl shape)
+      (0 until frags / 2).foreach(landFragment)
+      val q1 = graft.streaming.SegmentIngest.start(
+        spark, watch.toString, out, ckpt, availableNow = false)
+      try {
+        waitFor(completed.size >= seg / 4, s"first ${seg / 4} segments")
+        // phase 2: the remaining fragments land while imports run…
+        (frags / 2 until frags).foreach(landFragment)
+        // …and the stream is KILLED with imports in flight (stop() as
+        // soon as the next marker appears — segments beyond it are
+        // mid-batch or undelivered)
+        waitFor(completed.size >= seg / 2, s"${seg / 2} segments before the kill")
+      } finally q1.stop()
+      q1.awaitTermination()
+      val afterKill = completed.size
+      println(s"[cluster-rehearsal] $master ingest: killed stream at " +
+        s"$afterKill/$seg segments imported")
+      // restart from the SAME checkpoint: offsets skip consumed
+      // fragments, markers skip completed segments, the drain finishes
+      // everything else exactly once
+      graft.streaming.SegmentIngest.start(
+        spark, watch.toString, out, ckpt, availableNow = true).awaitTermination()
+      val ids = completed.sorted
+      require(ids.size == seg,
+        s"restarted drain left ${seg - ids.size} of $seg segments unimported")
+      // parity: a fresh batch importManifest of the same manifest must
+      // produce row-identical per-segment stores
+      val stats = Pipeline.importManifest(spark, s"$fixture/manifest/wat.paths", batchOut)
+      require(stats.imported.size == seg && stats.remaining.isEmpty,
+        s"batch parity import incomplete: $stats")
+      def segRows(store: String, id: String): Seq[String] =
+        graft.sinks.LinkStore.read(spark,
+            s"${sources.SegmentManifest.segmentDir(store, id)}/links")
+          .drop("domain_bucket").collect().map(_.toString).sorted.toSeq
+      ids.foreach { id =>
+        require(segRows(out, id) == segRows(batchOut, id),
+          s"segment $id: stream-ingested store diverged from batch import")
+      }
+      // idempotence: a caught-up replay must rewrite nothing
+      def markerStamps: Map[String, Long] = ids.map { id =>
+        id -> new java.io.File(sources.SegmentManifest.segmentDir(out, id),
+          sources.SegmentManifest.Marker).lastModified()
+      }.toMap
+      val stamps = markerStamps
+      graft.streaming.SegmentIngest.start(
+        spark, watch.toString, out, ckpt, availableNow = true).awaitTermination()
+      require(markerStamps == stamps, "caught-up replay rewrote a marker")
+      println(s"[cluster-rehearsal] $master ingest: $seg segments (${pages}p×${links}l), " +
+        s"kill at $afterKill + restart → exactly-once, batch parity, replay no-op")
+    } finally Seq(watch, outDir, ckptDir, batchDir).foreach(SealedDir.deleteRecursively)
   }
 
   def main(args: Array[String]): Unit = {

@@ -27,9 +27,14 @@ object Pipeline {
   final case class ImportStats(
       pages: Long, links: Long, compacted: Long, domains: Long)
 
-  /** Import WAT segments into a link store + page store at `outDir`.
-    * Returns counts for monitoring (one extra action per count — call
-    * with `stats = false` to skip them in production).
+  /** Import WAT segments into a servable link store + page store at
+    * `outDir`, in the domain-bucketed layout of [[LinkStore]] and
+    * [[graft.sinks.PageStore]] — the reference's importer and
+    * storelinks in one call, for a store that is served as written.
+    * A manifest import writes its segments with [[importSegment]]
+    * instead, which only the fold reads. Returns counts for monitoring
+    * (one extra action per count — call with `stats = false` to skip
+    * them in production).
     */
   def importSegments(
       spark: SparkSession,
@@ -37,18 +42,9 @@ object Pipeline {
       outDir: String,
       ignoreDomains: Seq[String] = Nil,
       stats: Boolean = true): ImportStats = {
-    require(watPaths.nonEmpty, "no WAT segments given")
-    val pages = WatSource.pages(spark, watPaths)
-    val links = WatSource.links(spark, watPaths, ignoreDomains)
-    val compacted = LinkCompaction.compact(links)
-    // external data crosses the store boundary here: validate loudly,
-    // like storelinks does at load time
-    LinkStore.write(compacted, s"$outDir/links", validate = true)
-    graft.sinks.PageStore.write(
-      pages.select(col("page_domain"), col("page_host"), col("page_path"),
-        col("page_rawquery"), col("page_scheme"), col("title"), col("ip"),
-        col("crawl_date"), col("noindex"), col("page_nofollow")),
-      s"$outDir/pages")
+    val (links, pages) = extract(spark, watPaths, ignoreDomains)
+    LinkStore.write(links, s"$outDir/links")
+    graft.sinks.PageStore.write(pages, s"$outDir/pages")
     if (stats) {
       // all counts come from the MATERIALIZED stores: compaction sums
       // qty, so sum(qty) over the store IS the raw link count — no
@@ -67,6 +63,41 @@ object Pipeline {
     } else ImportStats(-1, -1, -1, -1)
   }
 
+  /** Import one segment's WAT files into the plain parquet stores
+    * `segDir/links` and `segDir/pages` — the reference importer's
+    * plain per-segment files (importer/main.go savePageFile). Every
+    * reader of a segment store reads it whole and [[foldSegments]]
+    * loads it into the domain-bucketed main store, so the segment
+    * write skips the bucket shuffle, sort and per-bucket directories:
+    * its files follow the plan's own output partitions (the coalesced
+    * compaction output for links, one file per WAT file for pages).
+    * Segment stores an older import left in the bucketed layout read
+    * the same way ([[segmentLinks]]).
+    */
+  private[graft] def importSegment(spark: SparkSession, watPaths: Seq[String],
+      segDir: String, ignoreDomains: Seq[String]): Unit = {
+    val (links, pages) = extract(spark, watPaths, ignoreDomains)
+    links.write.mode("overwrite").parquet(s"$segDir/links")
+    pages.write.mode("overwrite").parquet(s"$segDir/pages")
+  }
+
+  /** The compacted links and the page rows of `watPaths`, ready to
+    * store. External data crosses the store boundary here, so the links
+    * are validated loudly ([[LinkStore.validated]]), like storelinks
+    * does at load time.
+    */
+  private def extract(spark: SparkSession, watPaths: Seq[String],
+      ignoreDomains: Seq[String]): (DataFrame, DataFrame) = {
+    require(watPaths.nonEmpty, "no WAT segments given")
+    val links = LinkStore.validated(
+      LinkCompaction.compact(WatSource.links(spark, watPaths, ignoreDomains)))
+    val pages = WatSource.pages(spark, watPaths)
+      .select(col("page_domain"), col("page_host"), col("page_path"),
+        col("page_rawquery"), col("page_scheme"), col("title"), col("ip"),
+        col("crawl_date"), col("noindex"), col("page_nofollow"))
+    (links, pages)
+  }
+
   final case class ManifestStats(
       imported: Seq[String], skipped: Seq[String], remaining: Seq[String])
 
@@ -76,9 +107,10 @@ object Pipeline {
     * `SelectSegmentToImport` (wat.go:979) + `.imported` markers
     * (importer/main.go:193-260).
     *
-    * Each manifest segment imports into its own store directory under
-    * `outDir/segments/<id>` and gets a completion marker as the LAST
-    * step; on restart, marker-complete segments are skipped, and a
+    * Each manifest segment imports into its own plain parquet stores
+    * under `outDir/segments/<id>` ([[importSegment]]; only the fold
+    * writes the domain-bucketed layout) and gets a completion marker as
+    * the LAST step; on restart, marker-complete segments are skipped, and a
     * segment interrupted mid-write (no marker) re-imports via
     * idempotent overwrite — run the same call any number of times and
     * the completed stores are identical, with nothing double-counted.
@@ -152,8 +184,8 @@ object Pipeline {
         case None => seg
         case Some(dir) => stageSegmentFiles(spark, seg, dir, fetch = fetch)
       }
-      importSegments(spark, source.files, SegmentManifest.segmentDir(outDir, seg.id),
-        ignoreDomains, stats = false)
+      importSegment(spark, source.files, SegmentManifest.segmentDir(outDir, seg.id),
+        ignoreDomains)
       SegmentManifest.markImported(spark, outDir, seg)
       // staged bytes served their purpose once the marker is down —
       // drop them so staging stays one-segment-sized, not crawl-sized
@@ -169,7 +201,9 @@ object Pipeline {
 
   /** Compacted links of every COMPLETED segment (marker-gated): rows
     * across segments may share a compaction key until [[foldSegments]]
-    * merges them — same read-time contract as [[streamedLinks]].
+    * merges them — same read-time contract as [[streamedLinks]]. Each
+    * segment store is read whole: a plain one as written, a bucketed
+    * one left by an older import with its `domain_bucket` dropped.
     */
   def segmentLinks(spark: SparkSession, outDir: String): DataFrame = {
     val ids = SegmentManifest.completedSegments(spark, outDir)
@@ -183,7 +217,9 @@ object Pipeline {
         s"${SegmentManifest.segmentDir(outDir, id)}/links").drop("domain_bucket"))
       .reduce(_ unionByName _)
 
-  /** Page records of every COMPLETED segment (marker-gated). */
+  /** Page records of every COMPLETED segment (marker-gated), read
+    * whole like [[segmentLinks]].
+    */
   def segmentPages(spark: SparkSession, outDir: String): DataFrame = {
     val ids = SegmentManifest.completedSegments(spark, outDir)
     require(ids.nonEmpty, s"no completed segments under $outDir")

@@ -6,7 +6,11 @@ import org.apache.spark.sql.functions._
 /** Partitioned parquet store for compacted links — the Spark analogue
   * of the reference's domain-keyed linkdb (cmd/storelinks/main.go loads
   * rows into a domain-indexed collection; queries always filter by one
-  * domain, controller.go:134).
+  * domain, controller.go:134). This is the layout of the MAIN store's
+  * generations, which serving reads by domain; a manifest import's
+  * per-segment stores are plain parquet (Pipeline.importManifest), like
+  * the reference importer's plain per-segment files, and only the fold
+  * loads them into this layout. [[read]] reads either.
   *
   * Layout: parquet partitioned by `domain_bucket` =
   * xxhash64(link_domain) mod NumBuckets. A per-domain directory would
@@ -48,22 +52,10 @@ object LinkStore {
     * pruning on the in-bucket domain filter.
     *
     * `validate = true` re-checks every link_domain at the store
-    * boundary and FAILS THE WRITE on the first invalid one — the
-    * reference's storelinks does the same while loading
-    * (`IsValidDomain`, wat.go:613; cmd/storelinks/main.go:74-178), so
-    * corrupt upstream data dies loudly instead of poisoning the store.
-    * Implemented as a per-row `assert_true` inside a filter (assert
-    * returns null on success, so the filter keeps every row and the
-    * optimizer cannot prune the check away).
+    * boundary ([[validated]]).
     */
-  def write(links: DataFrame, path: String, validate: Boolean = false): Unit = {
-    val checked =
-      if (!validate) links
-      else links.filter(assert_true(
-        graft.functions.UrlFns.isValidHost(col("link_domain")),
-        concat(lit("invalid link_domain at store boundary: "),
-          col("link_domain"))).isNull)
-    checked
+  def write(links: DataFrame, path: String, validate: Boolean = false): Unit =
+    (if (validate) validated(links) else links)
       .withColumn("domain_bucket", bucketOf(col("link_domain")))
       .repartition(col("domain_bucket"))
       .sortWithinPartitions(col("domain_bucket"), col("link_domain"))
@@ -71,7 +63,21 @@ object LinkStore {
       .partitionBy("domain_bucket")
       .mode("overwrite")
       .parquet(path)
-  }
+
+  /** `links` with every link_domain re-checked at the store boundary:
+    * the write FAILS on the first invalid one — the reference's
+    * storelinks does the same while loading (`IsValidDomain`,
+    * wat.go:613; cmd/storelinks/main.go:74-178), so corrupt upstream
+    * data dies loudly instead of poisoning the store. Implemented as a
+    * per-row `assert_true` inside a filter (assert returns null on
+    * success, so the filter keeps every row and the optimizer cannot
+    * prune the check away).
+    */
+  private[graft] def validated(links: DataFrame): DataFrame =
+    links.filter(assert_true(
+      graft.functions.UrlFns.isValidHost(col("link_domain")),
+      concat(lit("invalid link_domain at store boundary: "),
+        col("link_domain"))).isNull)
 
   /** Reads resolve the generation pointer first (plain dirs — segment
     * stores, pre-migration data — resolve to themselves; see StoreGen).

@@ -10,7 +10,9 @@ import org.apache.spark.sql.functions._
   * `domain_bucket = hash(page_domain) mod NumBuckets` partitions prune
   * domain reads to 1/NumBuckets of the files, in-bucket sort by
   * (page_domain, page_host, page_path) keeps row-group min/max pruning
-  * effective for host lookups.
+  * effective for host lookups. As with links, only the main store's
+  * generations use this layout; a manifest import's per-segment page
+  * stores are plain parquet, which [[read]] reads too.
   */
 object PageStore {
 

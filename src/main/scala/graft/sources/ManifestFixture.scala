@@ -31,7 +31,7 @@ object ManifestFixture {
   /** Bump when SegmentIngest / the per-segment import protocol changes
     * semantics — part of [[ingestedStore]]'s cache key.
     */
-  val IngestProtocolVersion = 3
+  val IngestProtocolVersion = 4
 
   private def watLine(uri: String, ip: String, date: String,
       links: Seq[(String, String)]): String = {

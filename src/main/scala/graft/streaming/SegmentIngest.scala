@@ -32,7 +32,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *
   * The import work runs in `foreachBatch`: a segment import is a
   * store-write PROTOCOL (refine chain → compaction → validated
-  * LinkStore/PageStore write → marker), not a row-append — so the
+  * plain segment-store write → marker), not a row-append — so the
   * streaming layer's job is exactly-once file discovery, and the
   * per-segment protocol stays byte-identical with the batch path
   * (one implementation, no drift).
@@ -56,8 +56,8 @@ object SegmentIngest {
     ordered.flatMap { id =>
       if (SegmentManifest.isImported(spark, outDir, id)) None
       else {
-        graft.Pipeline.importSegments(spark, byId(id),
-          SegmentManifest.segmentDir(outDir, id), ignoreDomains, stats = false)
+        graft.Pipeline.importSegment(spark, byId(id),
+          SegmentManifest.segmentDir(outDir, id), ignoreDomains)
         SegmentManifest.markImported(spark, outDir,
           SegmentManifest.Segment(id, byId(id)))
         Some(id)

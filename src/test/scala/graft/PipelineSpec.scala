@@ -107,6 +107,84 @@ class PipelineSpec extends SparkSpec {
       .query(api.PageDbRequest("www.sitea.com")).length == 1)
   }
 
+  test("a gzipped manifest parses to the same segments as the plain one") {
+    import graft.sources.SegmentManifest
+    import graft.sources.SegmentManifest.Segment
+    // the reference ships its manifest as wat.paths.gz: a comment, a
+    // blank line, relative and absolute entries
+    val lines = Seq(
+      "# crawl segments",
+      "segments/1700000000.12/wat/a.warc.wat.gz",
+      "",
+      "/archive/segments/1700000000.13/wat/b.warc.wat.gz",
+      "segments/1700000000.12/wat/c.warc.wat.gz")
+    val d = SparkSpec.tempDir("gzmanifest")
+    val plain = d.resolve("wat.paths")
+    Files.writeString(plain, lines.mkString("", "\n", "\n"))
+    val gz = d.resolve("wat.paths.gz")
+    val w = new java.io.OutputStreamWriter(
+      new java.util.zip.GZIPOutputStream(Files.newOutputStream(gz)), "UTF-8")
+    try w.write(lines.mkString("", "\n", "\n")) finally w.close()
+    val base = Some("/crawl/")
+    val fromGz = SegmentManifest.parse(spark, gz.toString, base)
+    assert(fromGz == SegmentManifest.parse(spark, plain.toString, base))
+    assert(fromGz == Seq(
+      Segment("1700000000.12", Seq(
+        "/crawl/segments/1700000000.12/wat/a.warc.wat.gz",
+        "/crawl/segments/1700000000.12/wat/c.warc.wat.gz")),
+      Segment("1700000000.13", Seq("/archive/segments/1700000000.13/wat/b.warc.wat.gz"))))
+  }
+
+  test("segment stores are plain, and one left bucketed by an older import folds the same") {
+    import graft.sinks.{LinkStore, PageStore}
+    import graft.sources.SegmentManifest
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{col, sum}
+    val fixture = new WatSourceSpec {}.fixturePath
+    def segCopy(name: String): String = {
+      val f = SparkSpec.tempDir(name).resolve("part.wat.gz")
+      Files.copy(java.nio.file.Paths.get(fixture), f)
+      f.toString
+    }
+    val manifest = SparkSpec.tempFile("ly", ".paths")
+    Files.writeString(manifest, Seq(segCopy("lya"), segCopy("lyb")).mkString("", "\n", "\n"))
+    def imported(name: String): String = {
+      val out = SparkSpec.tempDir(name).toString
+      Pipeline.importManifest(spark, manifest.toString, out)
+      out
+    }
+    val (plain, mixed) = (imported("lyplain"), imported("lymixed"))
+    def entries(dir: String): Seq[String] = new java.io.File(dir).list().toSeq
+    val ids = SegmentManifest.completedSegments(spark, plain)
+    assert(ids.size == 2)
+    for (id <- ids; store <- Seq("links", "pages")) {
+      val names = entries(s"${SegmentManifest.segmentDir(plain, id)}/$store")
+      assert(names.exists(_.endsWith(".parquet")), s"$id/$store: $names")
+      assert(!names.exists(_.startsWith("domain_bucket=")), s"$id/$store: $names")
+    }
+
+    // rewrite one segment of `mixed` in the bucketed layout, as an
+    // import before plain segment stores left it
+    val old = SegmentManifest.segmentDir(mixed, SegmentManifest.completedSegments(spark, mixed).head)
+    def rewrite(store: String, write: (DataFrame, String) => Unit): Unit = {
+      val df = spark.read.parquet(s"$old/$store")
+      write(spark.createDataFrame(df.collectAsList(), df.schema), s"$old/$store")
+      assert(entries(s"$old/$store").exists(_.startsWith("domain_bucket=")))
+    }
+    rewrite("links", LinkStore.write(_, _))
+    rewrite("pages", PageStore.write(_, _))
+
+    Seq(plain, mixed).foreach(Pipeline.foldSegments(spark, _))
+    def rows(df: DataFrame): Seq[String] =
+      df.drop("domain_bucket").collect().map(_.toString).sorted.toSeq
+    def qty(out: String): Long =
+      Pipeline.links(spark, out).agg(sum(col("qty"))).head().getLong(0)
+    assert(rows(Pipeline.links(spark, mixed)) == rows(Pipeline.links(spark, plain)))
+    assert(qty(mixed) == qty(plain) && qty(plain) == 12, "2 identical segments x 6 links")
+    assert(rows(PageStore.read(spark, s"$mixed/pages")) ==
+      rows(PageStore.read(spark, s"$plain/pages")))
+  }
+
   test("segment selector restricts a manifest run like the importer's 4th arg") {
     import graft.sources.SegmentManifest
     // ordinal parsing mirrors the reference's SegmentID derivation
