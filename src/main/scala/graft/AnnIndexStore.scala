@@ -1,5 +1,6 @@
 package graft
 
+import graft.sinks.StoreGen
 import org.apache.spark.sql.SparkSession
 import graft.operators.SimilarityOps.{FineLevel, FitPressure, IvfIndex, PqCodebook}
 
@@ -65,11 +66,11 @@ object AnnIndexStore {
   }
 
   private def load(spark: SparkSession, p: String): Artifact = {
-    val cRows = spark.read.parquet(s"$p/coarse")
+    val cRows = StoreGen.loadParquet(spark, s"$p/coarse")
       .select("cell", "centroid", "cnorm").collect().sortBy(_.getInt(0))
     val cents: Seq[Seq[Double]] = cRows.map(_.getSeq[Double](1)).toSeq
     val cnorms: Seq[Double] = cRows.map(_.getDouble(2)).toSeq
-    val fRows = spark.read.parquet(s"$p/fine")
+    val fRows = StoreGen.loadParquet(spark, s"$p/fine")
       .select("coarse_cell", "j", "centroid", "norm").collect()
       .sortBy(r => (r.getInt(0), r.getInt(1)))
     val byCell = fRows.groupBy(_.getInt(0))
@@ -78,13 +79,13 @@ object AnnIndexStore {
     val fineNorms = Array.tabulate(cents.length)(c =>
       byCell(c).map(_.getDouble(3)).toArray)
     val offsets = fineNorms.map(_.length).scanLeft(0)(_ + _).dropRight(1)
-    val m = spark.read.parquet(s"$p/meta")
+    val m = StoreGen.loadParquet(spark, s"$p/meta")
       .select("probe_den", "fit_cells", "fit_capped_cells",
         "fit_max_cell_sample", "fit_total_sample").collect().head
     val fine = FineLevel(offsets, fineCents, fineNorms,
       probeDen = m.getInt(0),
       fitPress = FitPressure(m.getLong(1), m.getLong(2), m.getLong(3), m.getLong(4)))
-    val pRows = spark.read.parquet(s"$p/pq")
+    val pRows = StoreGen.loadParquet(spark, s"$p/pq")
       .select("book", "code", "centroid").collect()
       .sortBy(r => (r.getInt(0), r.getInt(1)))
     val books: Seq[Seq[Seq[Double]]] = pRows.groupBy(_.getInt(0)).toSeq

@@ -56,7 +56,7 @@ object Pipeline {
         (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1), r.getLong(2))
       }
       ImportStats(
-        pages = spark.read.parquet(s"$outDir/pages").count(),
+        pages = graft.sinks.PageStore.read(spark, s"$outDir/pages").count(),
         links = nLinks,
         compacted = nCompacted,
         domains = nDomains)
@@ -349,23 +349,20 @@ object Pipeline {
     * the warm-start input; serving paths use [[hostRanksFor]] instead,
     * which prunes to the requested hosts' buckets.
     */
-  def hostRanks(spark: SparkSession, outDir: String): Option[DataFrame] = {
-    val resolved = graft.sinks.StoreGen.resolve(spark, s"$outDir/links")
-    val p = new org.apache.hadoop.fs.Path(resolved, RanksArtifact)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.parquet(p.toString).select(col("host"), col("rank")))
-    else None
-  }
+  def hostRanks(spark: SparkSession, outDir: String): Option[DataFrame] =
+    graft.sinks.StoreGen.readParquet(spark,
+        s"${graft.sinks.StoreGen.resolve(spark, s"$outDir/links")}/$RanksArtifact")
+      .map(_.select(col("host"), col("rank")))
 
   /** SERVING read of the live ranks as a frame: only the requested
     * hosts' `rank_bucket=` directories of `_RANKS` are listed and
     * scanned ([[graft.sinks.StoreGen.readPartitions]]), so a rank
     * lookup against a crawl-scale artifact touches ≤ hosts.size of
     * [[graft.sinks.LinkStore.NumBuckets]] partitions instead of the
-    * full host table. Building the frame runs no Spark job once the
-    * generation's `_RANKS` schema is memoized (its first bind infers
-    * it: a listing job over every bucket plus a footer job); a whole
-    * `_RANKS` read paid both on every call. Empty frame when no ranks
+    * full host table. Building the frame runs no Spark job: the
+    * schema comes from the footer of a listed file, where a whole
+    * `_RANKS` read pays a listing job over every bucket plus an
+    * inference job on every call. Empty frame when no ranks
     * artifact is published. For q69 and other many-host reads; one
     * host's serving lookup is [[hostRankOf]].
     */
@@ -387,9 +384,9 @@ object Pipeline {
   /** One host's live rank, read in the calling thread from the host's
     * one `rank_bucket=` directory of the live `_RANKS`
     * ([[graft.sinks.StoreGen.listPartitions]], then
-    * [[api.ServingRows.direct]]): no Spark job once the generation's
-    * `_RANKS` schema is memoized. None when the host has no rank or no
-    * ranks artifact is published.
+    * [[api.ServingRows.direct]]): no Spark job, the schema read from
+    * the footer of the bucket's file. None when the host has no rank or
+    * no ranks artifact is published.
     */
   def hostRankOf(spark: SparkSession, outDir: String,
       host: String): Option[Double] =
@@ -440,6 +437,13 @@ object Pipeline {
 
   private val RanksArtifact = "_RANKS"
 
+  /** A main store's live rows without `domain_bucket`, for a rewrite to
+    * merge into; None before its first publish.
+    */
+  private def liveRows(spark: SparkSession, store: String): Option[DataFrame] =
+    graft.sinks.StoreGen.readParquet(spark, graft.sinks.StoreGen.resolve(spark, store))
+      .map(_.drop("domain_bucket"))
+
   private def foldSegmentsLeased(spark: SparkSession, outDir: String,
       maintainRanks: Boolean, rankTol: Double, rankMaxIters: Int,
       beforeCommit: () => Unit = () => ()): FoldStats = {
@@ -455,10 +459,7 @@ object Pipeline {
     var rankIters: Option[Int] = None
     if (linksToFold.nonEmpty) {
       val segs = segmentLinksOf(spark, outDir, linksToFold)
-      val existing =
-        try Some(LinkStore.read(spark, s"$outDir/links").drop("domain_bucket"))
-        catch { case _: org.apache.spark.sql.AnalysisException => None }
-      val all = existing.fold(segs)(e => segs.unionByName(e))
+      val all = liveRows(spark, s"$outDir/links").fold(segs)(e => segs.unionByName(e))
       linksGen = graft.sinks.StoreGen.prepare(spark, s"$outDir/links", tmp => {
         LinkStore.write(LinkCompaction.compact(all), tmp)
         writeLedger(spark, tmp, linksLedger ++ linksToFold)
@@ -480,12 +481,10 @@ object Pipeline {
     var pagesGen = -1L
     if (pagesToFold.nonEmpty) {
       val pages = segmentPagesOf(spark, outDir, pagesToFold)
-      val existingPages =
-        try Some(graft.sinks.PageStore.read(spark, s"$outDir/pages").drop("domain_bucket"))
-        catch { case _: org.apache.spark.sql.AnalysisException => None }
       // page records carry no qty: an identical row from two folds is
       // the same crawl record twice, so the fold dedups exactly
-      val allPages = existingPages.fold(pages)(e => pages.unionByName(e)).distinct()
+      val allPages = liveRows(spark, s"$outDir/pages")
+        .fold(pages)(e => pages.unionByName(e)).distinct()
       pagesGen = graft.sinks.StoreGen.prepare(spark, s"$outDir/pages", tmp => {
         graft.sinks.PageStore.write(allPages, tmp)
         writeLedger(spark, tmp, pagesLedger ++ pagesToFold)
@@ -645,8 +644,7 @@ object Pipeline {
     * folds them).
     */
   def streamedLinks(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.option("basePath", s"$outDir/links_stream")
-      .parquet(s"$outDir/links_stream").drop("batch")
+    graft.sinks.StoreGen.loadParquet(spark, s"$outDir/links_stream").drop("batch")
 
   /** Fold the streamed batches plus any existing main store into a
     * freshly compacted main store — the periodic re-compaction pass.
@@ -656,10 +654,7 @@ object Pipeline {
     */
   def compactStream(spark: SparkSession, outDir: String): Unit = {
     val streamed = streamedLinks(spark, outDir)
-    val existing =
-      try Some(LinkStore.read(spark, s"$outDir/links").drop("domain_bucket"))
-      catch { case _: org.apache.spark.sql.AnalysisException => None }
-    val all = existing.fold(streamed)(e => streamed.unionByName(e))
+    val all = liveRows(spark, s"$outDir/links").fold(streamed)(e => streamed.unionByName(e))
     // temp-write + swap: reads the old store while writing, and a
     // failed write can't destroy the only copy (see safeRewrite)
     safeRewrite(spark, s"$outDir/links",
@@ -672,8 +667,8 @@ object Pipeline {
     * (`LinkStore.domainBucket`, [[api.ServingRows.direct]]). The store
     * keys `link_domain` by eTLD+1, so the bind uses the request's
     * registrable domain; the subdomain part of the request is applied
-    * by LinkDb.query itself. The first bind of a generation infers and
-    * memoizes its schema (Spark jobs); later binds only list.
+    * by LinkDb.query itself. The bind lists that directory and reads
+    * the schema from the footer of a file in it: no bind runs a job.
     */
   def linkDb(spark: SparkSession, outDir: String, domain: String): api.LinkDb = {
     val (etld1, _) = graft.functions.UrlFns.splitDomain(domain)
@@ -704,13 +699,11 @@ object Pipeline {
     * parquet files in the server's own thread: the per-request read is
     * 1/NumBuckets of the store plus row-group pruning, no request runs
     * a Spark job, and a store rewrite (compactStream/foldSegments) is
-    * picked up by the very next request. What carries across requests
-    * is metadata only: the schema of each store's live generation,
-    * memoized per generation directory. That is safe because a
-    * committed generation is never written again and the memo is
-    * replaced when `_CURRENT` moves. Listings are not kept: one bound
-    * to a generation would name files that the second fold after it
-    * prunes. `port = 0` picks an ephemeral port.
+    * picked up by the very next request. Nothing about a store carries
+    * across requests: each bind lists its directory and reads the
+    * schema from the footer of a file it lists. A kept listing or
+    * schema bound to a generation would name files that the second
+    * fold after it prunes. `port = 0` picks an ephemeral port.
     *
     * The server's generation token is the pair of `_CURRENT` targets of
     * links and pages (`_RANKS` rides in the links generation). A failed

@@ -1,5 +1,6 @@
 package graft
 
+import graft.sinks.StoreGen
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -10,6 +11,10 @@ import org.apache.spark.sql.functions._
   * deterministically from the TPC-H-ish testdata, so that every operator
   * over it has a DuckDB-reproducible oracle. At 100 TB the same operators
   * run over real extracted-link parquet with the identical schema.
+  *
+  * Every table read takes its schema from the footer of the file it
+  * reads ([[StoreGen.footerSchema]]): no schema-inference job, and
+  * no memo, so a table rewritten in place reads with its new schema.
   */
 object Tables {
 
@@ -20,59 +25,32 @@ object Tables {
     */
   val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
 
-  /** Schema memo for the immutable base tables, keyed by file path.
-    * r19 (OPTIMIZATION_r19.md, change 2): a bare
-    * `spark.read.parquet` pays eager footer schema-INFERENCE on every
-    * call — ~72 ms/table at sf0.1, and every registered query pays it
-    * for 1-3 tables in each bench pass. Supplying the schema skips
-    * inference (listing still happens; the scan reads the same files),
-    * ~8× cheaper per read call. This caches METADATA only — never
-    * rows, never plan fragments — exactly what a warehouse catalog
-    * provides at 100 TB; the testdata tables are immutable for a
-    * process lifetime.
-    */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
-
-  private def readBase(spark: SparkSession, path: String): DataFrame =
-    spark.read
-      .schema(schemaCache.computeIfAbsent(path, p => spark.read.parquet(p).schema))
-      .parquet(path)
-
-  /** NOTE (schema memo restriction, r20/ADVICE): base-table schemas are
-    * memoized per path for the JVM lifetime with NO invalidation —
-    * correct because every `dir` passed here is an immutable testdata /
-    * warehouse generation for the life of a process. An in-process
-    * REWRITE of a base-table path with a different schema would read
-    * with the stale one; regenerate into a fresh dir (the MakeScale
-    * convention) or restart the JVM instead.
-    */
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    if (name == "events") {
-      // events.parquet has shipped as TIMESTAMP(NANOS) in some testdata
-      // generations (which vanilla Spark 4 refuses — read nanos as long,
-      // convert) and plain TIMESTAMP(MICROS) in others. Handle BOTH by
-      // inspecting what the scan actually produced, so a testdata regen
-      // can't silently break every events query. The conf is
-      // session-global by necessity (no per-read option); avoid the
-      // plan-build-time mutation when the session is already configured.
-      if (spark.conf.get(NanosAsLong, "false") != "true")
-        spark.conf.set(NanosAsLong, "true")
-      val raw = readBase(spark, s"$dir/$name.parquet")
-      raw.schema("ts").dataType match {
-        // integer `div`, not `/`: epoch-nanos exceed double's exact range,
-        // and `/` is double division. Floor-to-micros matches DuckDB's own
-        // nanos->micros truncation when it reads the same parquet.
-        case org.apache.spark.sql.types.LongType =>
-          raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-        // micros parquet reads as NTZ; cast to the instant type under the
-        // UTC session zone — identical wall-clock values to the nanos
-        // path, so every downstream plan and oracle sees one type
-        case org.apache.spark.sql.types.TimestampNTZType =>
-          raw.withColumn("ts", col("ts").cast("timestamp"))
-        case _ => raw
-      }
-    } else readBase(spark, s"$dir/$name.parquet")
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    // events.parquet has shipped as TIMESTAMP(NANOS) in some testdata
+    // generations (which vanilla Spark 4 refuses — read nanos as long,
+    // convert) and plain TIMESTAMP(MICROS) in others. Handle BOTH by
+    // inspecting what the scan actually produced, so a testdata regen
+    // can't silently break every events query. The conf is
+    // session-global (no per-read option) and must be set before the
+    // read: the footer schema converts under it.
+    if (name == "events" && spark.conf.get(NanosAsLong, "false") != "true")
+      spark.conf.set(NanosAsLong, "true")
+    val raw = StoreGen.loadParquet(spark, s"$dir/$name.parquet")
+    if (name != "events") raw
+    else raw.schema("ts").dataType match {
+      // integer `div`, not `/`: epoch-nanos exceed double's exact range,
+      // and `/` is double division. Floor-to-micros matches DuckDB's own
+      // nanos->micros truncation when it reads the same parquet.
+      case org.apache.spark.sql.types.LongType =>
+        raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+      // micros parquet reads as NTZ; cast to the instant type under the
+      // UTC session zone — identical wall-clock values to the nanos
+      // path, so every downstream plan and oracle sees one type
+      case org.apache.spark.sql.types.TimestampNTZType =>
+        raw.withColumn("ts", col("ts").cast("timestamp"))
+      case _ => raw
+    }
+  }
 
   /** Link fact table derived from orders x customer (dim join is a
     * broadcast at any scale: customer keys are recycled via modulo).
@@ -185,11 +163,8 @@ object Tables {
   }
 
   /** Read a just-dumped directory back with the WRITTEN frame's own
-    * schema. r19 (plans/r19/schema_inference_probe.txt): a bare read
-    * pays ~70 ms of footer schema inference per call; the write just
-    * fixed the schema, so supplying it is free and involves no caching
-    * at all. The parquet scan still reads the actual files — only the
-    * redundant inference is skipped.
+    * schema: no footer read and no inference job (a bare read paid
+    * ~70 ms of inference, plans/r19/schema_inference_probe.txt).
     */
   def readBack(df: DataFrame, path: String): DataFrame =
     df.sparkSession.read.schema(df.schema).parquet(path)

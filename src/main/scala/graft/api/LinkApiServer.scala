@@ -51,16 +51,15 @@ final class LinkApiServer(
     // beyond the reference's surface: when set, POST /api/ranks serves
     // the store-maintained PageRank of one host (Pipeline.hostRankOf —
     // a read of the host's one rank_bucket directory of the live
-    // generation's _RANKS in the calling thread; with the generation's
-    // schema memoized, the lookup runs no Spark job)
+    // generation's _RANKS in the calling thread, its schema from the
+    // footer of the file it reads: the lookup runs no Spark job)
     rankOf: Option[String => Option[Double]] = None,
     // beyond the reference's surface: when set, POST /api/pages serves
     // the page records of one host (Pipeline.pageDb — a fresh listing
     // of the eTLD+1's page-store bucket directory per request, same
     // bind-late posture as /api/links, read in the calling thread; the
-    // bind reuses the memoized schema of the live generation, safe
-    // because a committed generation is never rewritten, and neither
-    // bind nor query runs a Spark job)
+    // bind reads the schema from the footer of a listed file, and
+    // neither bind nor query runs a Spark job)
     pageDbOf: Option[String => PageDb] = None,
     // per-request time budget on store reads — the reference caps
     // every DB query at 61 s (controller.go:95-104 SetMaxTime +

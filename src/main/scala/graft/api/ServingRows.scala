@@ -66,7 +66,7 @@ private[graft] object ServingRows extends PredicateHelper {
   def direct(spark: SparkSession, bucket: StoreGen.Partitions, bound: Column*): ServingRows =
     new ServingRows {
       def window(filter: Column, order: Seq[Column], offset: Int, fetch: Int): Seq[Row] = {
-        val schema = bucket.rowSchema
+        val schema = bucket.schema
         val attrs = DataTypeUtils.toAttributes(schema)
         val cond = CB.expressionEager((bound :+ filter).reduce(_ && _))
         val filtered = Filter(cond, LocalRelation(attrs))

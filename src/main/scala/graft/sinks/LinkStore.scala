@@ -33,9 +33,8 @@ object LinkStore {
     * positive modulo — recomputed here directly, so naming a domain's
     * bucket directory costs no Spark job. The rest of a serving bind
     * is [[StoreGen.readPartitions]]: it lists only that directory and
-    * takes the schema from its per-generation memo, so after the first
-    * bind of a generation the whole bind runs no job. LinkDbSpec pins
-    * equality with the Column version.
+    * reads the schema from the footer of a file in it, so no bind runs
+    * a job. LinkDbSpec pins equality with the Column version.
     */
   def bucketOfDomain(domain: String): Int = {
     val b = domain.getBytes(java.nio.charset.StandardCharsets.UTF_8)
@@ -80,10 +79,11 @@ object LinkStore {
         col("link_domain"))).isNull)
 
   /** Reads resolve the generation pointer first (plain dirs — segment
-    * stores, pre-migration data — resolve to themselves; see StoreGen).
+    * stores, pre-migration data — resolve to themselves; see StoreGen),
+    * with the schema of a file's footer ([[StoreGen.loadParquet]]).
     */
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(StoreGen.resolve(spark, path))
+    StoreGen.loadParquet(spark, StoreGen.resolve(spark, path))
 
   /** Domain-filtered read: only the domain's bucket directory is listed
     * and read ([[StoreGen.readPartitions]]); the bucket predicate stays

@@ -27,9 +27,9 @@ object PageStore {
       .mode("overwrite")
       .parquet(path)
 
-  /** Reads resolve the generation pointer first (see StoreGen). */
+  /** Reads resolve the generation pointer first (see [[LinkStore.read]]). */
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(StoreGen.resolve(spark, path))
+    StoreGen.loadParquet(spark, StoreGen.resolve(spark, path))
 
   /** eTLD+1-filtered read of the domain's bucket directory only, with
     * partition + row-group pruning (see [[LinkStore.readDomain]]).

@@ -130,13 +130,48 @@ class ServingPathSpec extends SparkSpec {
     }
   }
 
+  private def handMade: String = ServingPathSpec.handMade
+
+  test("the direct serving path answers exactly as the frame path on hand-made edge rows") {
+    val links = LinkStore.read(spark, s"$handMade/links")
+    val ties = Seq("ties.com", "www.ties.com", "dév.ties.com", "other.org").flatMap { d =>
+      for (sort <- sorts; order <- Seq("asc", "desc"); limit <- Seq(1, 100))
+        yield LinkDbRequest(d, Nil, sort, order, limit, 2)
+    }
+    val reqs = linkRequests(links, seed = 23, n = 60) ++ ties
+    assertSameLinks(handMade, reqs)
+    assertSamePages(handMade, pageRequests(PageStore.read(spark, s"$handMade/pages"), seed = 24))
+
+    // the one definition itself: nulls sort first ascending and last
+    // descending, and ties fall through to the full composite key
+    val byText = Pipeline.linkDb(spark, handMade, "ties.com")
+    def textsOf(order: String) = byText.query(
+      LinkDbRequest("ties.com", sort = Some("linkText"), order = order)).map(_.linkText)
+    val textRows = links.filter("link_domain = 'ties.com'")
+    val nulls = textRows.filter("link_text is null").count().toInt
+    assert(nulls > 0)
+    val asc = textsOf("asc")
+    assert(asc.take(nulls).forall(_.isEmpty) && asc == asc.sorted(Ordering.String), asc)
+    val desc = textsOf("desc")
+    assert(desc.takeRight(nulls).forall(_.isEmpty), desc)
+    // the tiebreak makes the order independent of the input's: the
+    // frame path over a shuffled frame answers the same
+    val shuffled = new LinkDb(links.repartition(5, org.apache.spark.sql.functions.col("page_host")))
+    ties.foreach(r => assert(shuffled.query(r) == Pipeline.linkDb(spark, handMade, r.domain).query(r), r))
+  }
+}
+
+object ServingPathSpec {
+
   /** A store of hand-made rows: nulls, empty strings, non-ASCII and
     * astral-plane text, and ties on every sort key, so the order of an
     * answer rests on the tiebreak and on where nulls sort. Rows are
     * listed against their sort order, so a reader that kept file order
     * on ties would differ.
     */
-  private lazy val handMade: String = {
+  lazy val handMade: String = {
+    val spark = SparkSpec.session
+    val store = ServingReadSpec.store
     val out = SparkSpec.tempDir("servingpath-hand").toString
     val linkSchema = LinkStore.read(spark, s"$store/links").drop("domain_bucket").schema
     val pageSchema = PageStore.read(spark, s"$store/pages").drop("domain_bucket").schema
@@ -176,33 +211,5 @@ class ServingPathSpec extends SparkSpec {
     StoreGen.publish(spark, s"$out/links", LinkStore.write(frame(linkRows, linkSchema), _))
     StoreGen.publish(spark, s"$out/pages", PageStore.write(frame(pageRows, pageSchema), _))
     out
-  }
-
-  test("the direct serving path answers exactly as the frame path on hand-made edge rows") {
-    val links = LinkStore.read(spark, s"$handMade/links")
-    val ties = Seq("ties.com", "www.ties.com", "dév.ties.com", "other.org").flatMap { d =>
-      for (sort <- sorts; order <- Seq("asc", "desc"); limit <- Seq(1, 100))
-        yield LinkDbRequest(d, Nil, sort, order, limit, 2)
-    }
-    val reqs = linkRequests(links, seed = 23, n = 60) ++ ties
-    assertSameLinks(handMade, reqs)
-    assertSamePages(handMade, pageRequests(PageStore.read(spark, s"$handMade/pages"), seed = 24))
-
-    // the one definition itself: nulls sort first ascending and last
-    // descending, and ties fall through to the full composite key
-    val byText = Pipeline.linkDb(spark, handMade, "ties.com")
-    def textsOf(order: String) = byText.query(
-      LinkDbRequest("ties.com", sort = Some("linkText"), order = order)).map(_.linkText)
-    val textRows = links.filter("link_domain = 'ties.com'")
-    val nulls = textRows.filter("link_text is null").count().toInt
-    assert(nulls > 0)
-    val asc = textsOf("asc")
-    assert(asc.take(nulls).forall(_.isEmpty) && asc == asc.sorted(Ordering.String), asc)
-    val desc = textsOf("desc")
-    assert(desc.takeRight(nulls).forall(_.isEmpty), desc)
-    // the tiebreak makes the order independent of the input's: the
-    // frame path over a shuffled frame answers the same
-    val shuffled = new LinkDb(links.repartition(5, org.apache.spark.sql.functions.col("page_host")))
-    ties.foreach(r => assert(shuffled.query(r) == Pipeline.linkDb(spark, handMade, r.domain).query(r), r))
   }
 }

@@ -10,8 +10,8 @@ import java.nio.file.{Files, Paths}
 
 /** The serving reads — `LinkStore.readDomain`, `PageStore.readDomain`
   * and `Pipeline.hostRanksFor` — list only the requested bucket
-  * directories of the live generation and take its schema from
-  * StoreGen's per-generation memo. Pinned here: what they cost in Spark
+  * directories of the live generation and read its schema from the
+  * footer of a listed file. Pinned here: what they cost in Spark
   * jobs, that they return exactly the rows of the whole-store reads,
   * and that a vanished generation fails as a stale store instead of
   * answering empty.
@@ -65,12 +65,24 @@ class ServingReadSpec extends SparkSpec {
   test("a serving bind and lookup of a bound generation run no Spark job") {
     val domain = "ext2.co.uk"
     val host = "www.sitea.com"
-    val rankHost = strings(Pipeline.hostRanks(spark, store).get, "host").min
-    // the first bind of a generation infers and memoizes its schemas
-    Pipeline.linkDb(spark, store, domain)
-    Pipeline.pageDb(spark, store, host)
-    Pipeline.hostRanksFor(spark, store, Seq(rankHost))
+    // the first bind of a freshly folded generation reads its schemas
+    // from file footers: no inference job
+    val (fresh, _) = foldedStore("servingfirstbind")
+    val (_, firstBinds) = jobsDuring(Seq(
+      Pipeline.linkDb(spark, fresh, domain),
+      Pipeline.pageDb(spark, fresh, host),
+      Pipeline.hostRanksFor(spark, fresh, Seq(host))))
+    assert(firstBinds == 0, "first bind of a generation")
+    // a plain root served as written by importSegments, on every bind
+    val plain = SparkSpec.tempDir("servingplainbind").toString
+    Pipeline.importSegments(spark, Seq(new WatSourceSpec {}.fixturePath), plain)
+    for (_ <- 1 to 2) {
+      val (_, plainBinds) = jobsDuring(Seq(
+        Pipeline.linkDb(spark, plain, domain), Pipeline.pageDb(spark, plain, host)))
+      assert(plainBinds == 0, "bind of a plain root")
+    }
 
+    val rankHost = strings(Pipeline.hostRanks(spark, store).get, "host").min
     val (links, linksBind) = jobsDuring(Pipeline.linkDb(spark, store, domain))
     val (pages, pagesBind) = jobsDuring(Pipeline.pageDb(spark, store, host))
     val (_, ranksBind) = jobsDuring(Pipeline.hostRanksFor(spark, store, Seq(rankHost)))
@@ -95,10 +107,10 @@ class ServingReadSpec extends SparkSpec {
     Files.writeString(manifest, Files.readString(manifest) + seg2 + "\n")
     Pipeline.importManifest(spark, manifest.toString, out)
     assert(Pipeline.foldSegments(spark, out, maintainRanks = true).foldedLinks.nonEmpty)
-    // the memo entry of the old generation is replaced: this bind
-    // infers the new schema, and it answers with the new rows
+    // the bind lists the new generation and reads its schema from a
+    // footer, with no job, and it answers with the new rows
     val (db, rebind) = jobsDuring(Pipeline.linkDb(spark, out, domain))
-    assert(rebind > 0, "bind after a publish must re-infer, not reuse the old entry")
+    assert(rebind == 0, "bind after a publish runs no job")
     assert(db.query(LinkDbRequest(domain)).map(_.qty) == Seq(2L))
     assert(jobsDuring(Pipeline.linkDb(spark, out, domain))._2 == 0)
   }
@@ -189,8 +201,8 @@ class ServingReadSpec extends SparkSpec {
 
   test("a pruned generation fails as stale, never as an empty answer") {
     val (out, _) = foldedStore("servingpruned")
-    // bind once so the generation's schemas are memoized: the memo
-    // must not turn a vanished generation into empty frames
+    // bind once first: a read that worked must not turn a vanished
+    // generation into empty frames
     allReads(out).foreach(_._2())
     Seq("links", "pages").foreach { s =>
       val gen = StoreGen.resolve(spark, s"$out/$s")
@@ -216,7 +228,7 @@ class ServingReadSpec extends SparkSpec {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val ptrs = Seq("links", "pages").map(s => Paths.get(out, s, "_CURRENT"))
     val names = ptrs.map(Files.readString(_))
-    // bind once so the generation's schemas are memoized
+    // bind once while the store is whole
     assert(Pipeline.linkDb(spark, out, "ext2.co.uk").query(LinkDbRequest("ext2.co.uk")).nonEmpty)
     assert(Pipeline.hostRankOf(spark, out, "www.sitea.com").nonEmpty)
 

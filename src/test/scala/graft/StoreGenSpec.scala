@@ -1,6 +1,8 @@
 package graft
 
-import graft.sinks.{LinkStore, StoreGen}
+import graft.sinks.{LinkStore, PageStore, StoreGen}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.types.StructType
 import java.nio.file.{Files, Paths}
 
 class StoreGenSpec extends SparkSpec {
@@ -75,5 +77,39 @@ class StoreGenSpec extends SparkSpec {
     // partition pruning still reaches the parquet scan inside the gen dir
     val plan = viaDomain.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("domain_bucket"))
+  }
+
+  test("a footer schema is the schema spark.read.parquet infers, on every layout") {
+    val fixture = new WatSourceSpec {}.fixturePath
+    val tables = new java.io.File(Tables.VerifyDir).listFiles().map(_.getPath)
+      .filter(_.endsWith(".parquet")).sorted.toSeq
+    assert(tables.size == 10, tables)
+    val store = ServingReadSpec.store
+    val links = StoreGen.resolve(spark, s"$store/links")
+    val tmp = SparkSpec.tempDir("sg_footer").toString
+    LinkStore.write(operators.LinkCompaction.compact(Tables.links(spark, sfDir)), s"$tmp/plain")
+    Pipeline.importSegment(spark, Seq(fixture), s"$tmp/seg", Nil)
+    // a segment left in the bucketed layout by an older import
+    LinkStore.write(LinkStore.read(spark, s"$tmp/seg/links"), s"$tmp/old/links")
+    PageStore.write(PageStore.read(spark, s"$tmp/seg/pages"), s"$tmp/old/pages")
+    val hand = ServingPathSpec.handMade
+    val stores = Seq(links, s"$links/_RANKS", StoreGen.resolve(spark, s"$store/pages"),
+      s"$tmp/plain", s"$tmp/seg/links", s"$tmp/seg/pages", s"$tmp/old/links", s"$tmp/old/pages",
+      StoreGen.resolve(spark, s"$hand/links"), StoreGen.resolve(spark, s"$hand/pages"))
+    // Tables.VerifyDir's files are DuckDB-written: no Spark row metadata
+    // in their footers; `events` converts under nanosAsLong, which the
+    // spec session sets
+    assert(spark.conf.get(Tables.NanosAsLong) == "true")
+    for (path <- tables ++ stores) {
+      val root = new Path(path)
+      val file = StoreGen.dataFile(
+        root.getFileSystem(spark.sparkContext.hadoopConfiguration), root).get
+      val inferred = spark.read.parquet(path).schema
+      // the partition directories between the root and the file, which
+      // Spark appends as discovered columns
+      val discovered = file.getPath.toUri.getPath.stripPrefix(root.toUri.getPath)
+        .split('/').filter(_.contains('=')).map(d => inferred(d.takeWhile(_ != '=')))
+      assert(StructType(StoreGen.footerSchema(spark, file) ++ discovered) == inferred, path)
+    }
   }
 }

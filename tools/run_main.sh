@@ -2,7 +2,8 @@
 # Dev-only runner: launch a graft main against the compiled classes
 # (build them first with `sbt compile`) without going through sbt,
 # which avoids the sbt server lock while a test run is in flight.
-# Mirrors build.sbt's fork JVM options.
+# Mirrors build.sbt's fork JVM options. The resources are on the
+# classpath from the source tree: `sbt compile` does not copy them.
 #   tools/run_main.sh graft.MakeScale /tmp/graft_sf1 /tmp/graft_sf10 10 perm
 #   tools/run_main.sh graft.ClusterRehearsal
 # The classpath is absolute and the add-opens list goes to executors
@@ -11,7 +12,7 @@
 # Scala build to use instead of probing SPARK_HOME's build layout.
 set -euo pipefail
 ROOT="$(cd "$(dirname "$0")/.." && pwd)"
-CP="$ROOT/target/scala-2.13/classes:/opt/spark/jars/*"
+CP="$ROOT/target/scala-2.13/classes:$ROOT/src/main/resources:/opt/spark/jars/*"
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
