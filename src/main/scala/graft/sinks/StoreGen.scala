@@ -1,15 +1,21 @@
 package graft.sinks
 
 import org.apache.hadoop.fs.{ChecksumException, FileContext, FileStatus, FileSystem, Options, Path}
+import org.apache.hadoop.mapred.{FileSplit, JobConf}
+import org.apache.hadoop.mapreduce.{TaskAttemptContext, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.filter2.predicate.FilterApi
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader, ParquetInputFormat}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.execution.datasources.{DataSourceUtils, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFilters, ParquetFooterReader, ParquetOptions, ParquetReadSupport, ParquetToSparkSchemaConverter, ParquetWriteSupport, VectorizedParquetRecordReader}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
@@ -130,12 +136,18 @@ object StoreGen {
         .parquet(listed.map(_._2): _*)
 
     /** Direct read of the listed files in the calling thread: no
-      * Spark job. Each parquet file is opened through the store path's
-      * Hadoop `FileSystem` with the session's Hadoop conf by Spark's
-      * own row reader, `pushed` prunes its row groups by their min/max
-      * statistics (only prunes: the caller still evaluates its
-      * predicate on every row), and `f` sees every row of the rest laid
-      * out as [[schema]]. A row is a view the reader reuses: copy what
+      * Spark job, and nothing broadcast or cached. Each parquet file is
+      * opened by Spark's own row reader, `VectorizedParquetRecordReader`
+      * (the one a Spark scan picks for these flat schemas), under one
+      * copy of the session's Hadoop conf per scan, set up as a Spark
+      * scan sets it ([[readConf]]). A Spark scan's reader build
+      * (`buildReaderWithPartitionValues`) broadcasts that conf to ship
+      * it to executors, ~10 ms a request on a 4-core host; this read
+      * runs where the conf already is. `pushed` prunes each file's row
+      * groups by their min/max statistics ([[openReader]]; only prunes:
+      * the caller still evaluates its predicate on every row), and `f`
+      * sees every row of the rest laid out as [[schema]], a column a
+      * file lacks as null. A row is a view the reader reuses: copy what
       * outlives the call. Any failure after the generation vanished is
       * a [[StaleGeneration]].
       */
@@ -143,28 +155,94 @@ object StoreGen {
       if (listed.nonEmpty)
         try {
           val part = StructType(Seq(schema(partCol)))
-          val data = StructType(schema.dropRight(1))
-          // a copy: the reader writes its requested schema into it.
-          // Plain reads: a vectored read hands each column chunk to a
-          // thread pool and waits for it, which cost a point read of a
-          // few small chunks ~10 ms on a loaded 4-core host
-          val conf = spark.sessionState.newHadoopConf()
-          conf.setBoolean(ParquetInputFormat.HADOOP_VECTORED_IO_ENABLED, false)
-          val read = new ParquetFileFormat().buildReaderWithPartitionValues(
-            spark, data, part, data, pushed,
-            Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), conf)
+          // a JobConf: the context would copy any other Configuration
+          val ctx = new TaskAttemptContextImpl(
+            readConf(spark, StructType(schema.dropRight(1))), new TaskAttemptID())
           for ((v, _, files) <- listed; st <- files) {
-            val rows = read(PartitionedFile(InternalRow(v),
-              SparkPath.fromPath(st.getPath), 0, st.getLen, Array.empty[String],
-              st.getModificationTime, st.getLen))
-            try rows.foreach(f)
-            finally rows match { case c: java.io.Closeable => c.close(); case _ => () }
+            val reader = openReader(spark.sessionState.conf, ctx, pushed, st)
+            try {
+              reader.initBatch(part, InternalRow(v))
+              while (reader.nextKeyValue()) f(reader.getCurrentValue.asInstanceOf[InternalRow])
+            } finally reader.close()
           }
         } catch {
           case e: Exception
               if !e.isInstanceOf[StaleGeneration] && genGone(fs(spark, root), root, live) =>
             throw stale(root, base, e)
         }
+  }
+
+  /** `file` opened for a [[Partitions.scan]] under `ctx`'s conf, as a
+    * Spark scan opens it: its footer read once; `pushed` converted
+    * against the file's own schema, under the session's push-down flags
+    * and the rebase modes its footer records, and set as the conf's
+    * row-group predicate, or cleared when nothing converts, so no
+    * predicate of an earlier file applies to it.
+    */
+  private def openReader(sql: SQLConf, ctx: TaskAttemptContext, pushed: Seq[Filter],
+      file: FileStatus): VectorizedParquetRecordReader = {
+    val conf = ctx.getConfiguration
+    val opened = ParquetFooterReader.openFileAndReadFooter(conf,
+      PartitionedFile(InternalRow.empty, SparkPath.fromPath(file.getPath), 0, file.getLen), true)
+    // the reader owns the opened stream once initialized
+    try {
+      val meta = opened.footer.getFileMetaData
+      val opts = new ParquetOptions(Map.empty[String, String], sql)
+      val rebase = DataSourceUtils.datetimeRebaseSpec(meta.getKeyValueMetaData.get,
+        opts.datetimeRebaseModeInRead)
+      val int96 = DataSourceUtils.int96RebaseSpec(meta.getKeyValueMetaData.get,
+        opts.int96RebaseModeInRead)
+      val predicate =
+        if (!sql.parquetFilterPushDown) None
+        else pushed.flatMap(new ParquetFilters(meta.getSchema, sql.parquetFilterPushDownDate,
+          sql.parquetFilterPushDownTimestamp, sql.parquetFilterPushDownDecimal,
+          sql.parquetFilterPushDownStringPredicate, sql.parquetFilterPushDownInFilterThreshold,
+          sql.caseSensitiveAnalysis, rebase).createFilter).reduceOption(FilterApi.and)
+      predicate match {
+        case Some(p) => ParquetInputFormat.setFilterPredicate(conf, p)
+        case None => conf.unset(ParquetInputFormat.FILTER_PREDICATE)
+      }
+      val convertTz =
+        if (sql.isParquetINT96TimestampConversion && !meta.getCreatedBy.startsWith("parquet-mr"))
+          DateTimeUtils.getZoneId(sql.sessionLocalTimeZone)
+        else null
+      val reader = new VectorizedParquetRecordReader(convertTz, rebase.mode.toString,
+        rebase.timeZone, int96.mode.toString, int96.timeZone, false,
+        sql.parquetVectorizedReaderBatchSize)
+      reader.initialize(new FileSplit(file.getPath, 0, file.getLen, Array.empty[String]), ctx,
+        Some(opened.inputFile), Some(opened.inputStream), Some(opened.footer))
+      reader
+    } catch { case e: Throwable => opened.inputStream.close(); throw e }
+  }
+
+  /** The Hadoop conf a [[Partitions.scan]] reads `schema` under: one
+    * copy of the context's, overlaid with the session's SQL confs as
+    * `SessionState.newHadoopConf` overlays them (made here as the
+    * `JobConf` itself, not copied into one), with the keys a Spark
+    * parquet scan sets for its reader (`ParquetFileFormat.setupHadoopConf`,
+    * which is private). Vectored IO stays off: a vectored read hands
+    * each column chunk to a thread pool and waits for it, which cost a
+    * point read of a few small chunks ~10 ms on a loaded 4-core host.
+    */
+  private def readConf(spark: SparkSession, schema: StructType): JobConf = {
+    val sql = spark.sessionState.conf
+    val conf = new JobConf(spark.sparkContext.hadoopConfiguration)
+    for ((k, v) <- sql.getAllConfs if v != null) conf.set(k, v)
+    conf.setBoolean(ParquetInputFormat.HADOOP_VECTORED_IO_ENABLED, false)
+    conf.set(ParquetInputFormat.READ_SUPPORT_CLASS, classOf[ParquetReadSupport].getName)
+    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, schema.json)
+    conf.set(ParquetWriteSupport.SPARK_ROW_SCHEMA, schema.json)
+    conf.set(SQLConf.SESSION_LOCAL_TIMEZONE.key, sql.sessionLocalTimeZone)
+    conf.setBoolean(SQLConf.NESTED_SCHEMA_PRUNING_ENABLED.key, sql.nestedSchemaPruningEnabled)
+    conf.setBoolean(SQLConf.CASE_SENSITIVE.key, sql.caseSensitiveAnalysis)
+    conf.setBoolean(SQLConf.PARQUET_BINARY_AS_STRING.key, sql.isParquetBinaryAsString)
+    conf.setBoolean(SQLConf.PARQUET_INT96_AS_TIMESTAMP.key, sql.isParquetINT96AsTimestamp)
+    conf.setBoolean(SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key,
+      sql.parquetInferTimestampNTZEnabled)
+    conf.setBoolean(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key, sql.legacyParquetNanosAsLong)
+    conf.setBoolean(SQLConf.PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION.key,
+      sql.parquetReaderRespectUnknownTypeAnnotation)
+    conf
   }
 
   /** The generation a read named is gone: pruned, or its root

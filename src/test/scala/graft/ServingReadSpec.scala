@@ -95,6 +95,62 @@ class ServingReadSpec extends SparkSpec {
     assert(linkRows.nonEmpty && pageRows.nonEmpty && rank.nonEmpty)
   }
 
+  /** The keys of every serving route over the shared store, absent
+    * ones included, and one lookup per key as a request runs it: bind
+    * and query.
+    */
+  private def lookups(): Seq[(String, () => Any)] = {
+    val links = strings(LinkStore.read(spark, s"$store/links"), "link_domain").sorted ++ absent
+    val pages = strings(PageStore.read(spark, s"$store/pages"), "page_host").sorted ++ absent
+    val ranks = strings(Pipeline.hostRanks(spark, store).get, "host").sorted ++ absent
+    links.map(d => s"links $d" -> (() => Pipeline.linkDb(spark, store, d).query(LinkDbRequest(d)))) ++
+      pages.map(h => s"pages $h" -> (() => Pipeline.pageDb(spark, store, h).query(PageDbRequest(h)))) ++
+      ranks.map(h => s"ranks $h" -> (() => Pipeline.hostRankOf(spark, store, h)))
+  }
+
+  test("a hundred serving lookups broadcast nothing") {
+    val all = lookups()
+    val sc = spark.sparkContext
+    // broadcast ids are handed out in order: the id after the lookups
+    // is the one after the id before them only if none was created
+    def nextId(): Long = { val b = sc.broadcast(0); try b.id finally b.destroy() }
+    val before = nextId()
+    val answers = (0 until 100).map(i => all(i % all.size)._2())
+    assert(nextId() == before + 1, "broadcasts created by 100 lookups")
+    assert(answers.count {
+      case xs: Seq[_] => xs.nonEmpty
+      case o: Option[_] => o.nonEmpty
+    } > 20)
+  }
+
+  test("concurrent serving lookups answer as a single thread does") {
+    val all = lookups()
+    assert(all.size >= 8)
+    val expected = all.map { case (what, run) => what -> run() }.toMap
+    // as LinkApiServer serves: 8 threads, each on its own keys
+    val threads = 8
+    val perThread = 60
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    val start = new java.util.concurrent.CountDownLatch(1)
+    try {
+      val work = (0 until threads).map { t =>
+        pool.submit(new java.util.concurrent.Callable[Seq[String]] {
+          def call(): Seq[String] = {
+            start.await()
+            (0 until perThread).flatMap { i =>
+              val (what, run) = all((t + i * threads) % all.size)
+              val got = run()
+              if (got == expected(what)) None else Some(s"$what: $got")
+            }
+          }
+        })
+      }
+      start.countDown()
+      val wrong = work.flatMap(_.get(5, java.util.concurrent.TimeUnit.MINUTES))
+      assert(wrong.isEmpty, wrong.take(5))
+    } finally pool.shutdownNow()
+  }
+
   test("after a fold publishes, the next bind serves the new generation") {
     val (out, manifest) = foldedStore("servingrefold")
     val domain = "ext2.co.uk"

@@ -1,7 +1,12 @@
 package graft
 
+import graft.api.ServingRows
 import graft.sinks.{LinkStore, PageStore, StoreGen}
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.sources.{EqualTo, Filter}
 import org.apache.spark.sql.types.StructType
 import java.nio.file.{Files, Paths}
 
@@ -111,5 +116,85 @@ class StoreGenSpec extends SparkSpec {
         .split('/').filter(_.contains('=')).map(d => inferred(d.takeWhile(_ != '=')))
       assert(StructType(StoreGen.footerSchema(spark, file) ++ discovered) == inferred, path)
     }
+  }
+
+  /** 20,000 rows sorted by `k` (50 keys, 400 rows each) in one parquet
+    * file of many small row groups, appended to `dir`.
+    */
+  private def writeSorted(dir: String): Unit = {
+    import spark.implicits._
+    (0 until 20000).map(i => (f"key-${i / 400}%03d", i, s"v$i")).toDF("k", "x", "y")
+      .sort("k").coalesce(1).write.mode("append")
+      .option("parquet.block.size", 4096).parquet(dir)
+  }
+
+  /** The bucket `domain_bucket=3` of the plain root `root`. */
+  private def bucket3(root: String): StoreGen.Partitions =
+    StoreGen.listPartitions(spark, root, "", "domain_bucket", Seq(3)).get
+
+  /** How many rows `scan` hands over under `pushed`, and those of them
+    * whose `k` is `key`, as sorted strings.
+    */
+  private def scanned(parts: StoreGen.Partitions, pushed: Seq[Filter],
+      key: String): (Int, Seq[String]) = {
+    val toRow = CatalystTypeConverters.createToScalaConverter(parts.schema)
+    val k = parts.schema.fieldIndex("k")
+    var seen = 0
+    val kept = Seq.newBuilder[String]
+    parts.scan(spark, pushed) { r =>
+      seen += 1
+      if (!r.isNullAt(k) && r.getUTF8String(k).toString == key)
+        kept += toRow(r).asInstanceOf[Row].toString
+    }
+    (seen, kept.result().sorted)
+  }
+
+  test("a pushed equality prunes the row groups a direct scan reads") {
+    val root = SparkSpec.tempDir("sg_prune").toString
+    writeSorted(s"$root/domain_bucket=3")
+    val parts = bucket3(root)
+    val key = "key-017"
+    val (all, viaAll) = scanned(parts, Nil, key)
+    val (read, viaPushed) = scanned(parts, Seq(EqualTo("k", key)), key)
+    assert(all == 20000)
+    assert(read < all, s"$read of $all rows read")
+    val frame = parts.frame(spark).filter(col("k") === key).collect().map(_.toString).sorted.toSeq
+    assert(frame.size == 400)
+    assert(viaAll == frame && viaPushed == frame)
+  }
+
+  test("each file of a bucket is read under a predicate built from its own schema") {
+    val root = SparkSpec.tempDir("sg_perfile").toString
+    val dir = s"$root/domain_bucket=3"
+    writeSorted(dir)
+    // the file an older writer left: no `k` column
+    import spark.implicits._
+    (0 until 100).map(i => (100000 + i, s"old$i")).toDF("x", "y")
+      .coalesce(1).write.mode("append").parquet(dir)
+    // the bucket's schema is the first listed file's: put the file
+    // with `k` first, renaming through Hadoop so the checksum sidecars
+    // follow their files
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!bucket3(root).schema.fieldNames.contains("k")) {
+      val Array(a, b) = fs.listStatus(new Path(dir)).map(_.getPath)
+        .filter(_.getName.startsWith("part-"))
+      val tmp = new Path(dir, "swap.parquet")
+      assert(fs.rename(a, tmp) && fs.rename(b, a) && fs.rename(tmp, b))
+    }
+    val parts = bucket3(root)
+    assert(parts.schema.fieldNames.toSeq == Seq("k", "x", "y", "domain_bucket"))
+    val key = "key-031"
+    val filter = col("k").isNull || col("k") === key
+    val order = Seq(col("x").asc)
+    val direct = ServingRows.direct(spark, parts).window(filter, order, 0, 100000)
+    assert(direct == ServingRows.frame(parts.frame(spark)).window(filter, order, 0, 100000))
+    assert(direct.count(_.isNullAt(0)) == 100 && direct.count(r => r.getString(0) == key) == 400)
+    assert(direct.forall(_.getInt(3) == 3))
+    // nothing converts against the older file's schema, so nothing
+    // prunes it; a predicate left set from the file before would drop
+    // all of it (parquet reads a missing column as all null)
+    var nulls = 0
+    parts.scan(spark, Seq(EqualTo("k", key)))(r => if (r.isNullAt(0)) nulls += 1)
+    assert(nulls == 100)
   }
 }
